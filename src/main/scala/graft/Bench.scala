@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every registered query against
-  * SPARK_GRAFT_SF_DIR at local[32] and prints ONE JSON line with total and
-  * per-query wall seconds.
+  * SPARK_GRAFT_SF_DIR under [[GraftSession]] and prints ONE JSON line
+  * with total and per-query wall seconds.
   *
   * Each query is forced through the noop sink — full materialization of
   * the physical plan with zero write cost. (A bare .count() would let
@@ -14,43 +14,27 @@ import org.apache.spark.sql.SparkSession
   * cluster.
   */
 object Bench {
+  /** Wall seconds of one run of query `name` through the noop sink, or
+    * -1 after printing `[$tag] $name failed: …` to stderr. */
+  private[graft] def runNoop(spark: SparkSession, sfDir: String,
+      name: String, tag: String): Double = {
+    val t0 = System.nanoTime()
+    try {
+      SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[$tag] $name failed: ${e.getMessage}")
+        return -1.0
+    }
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // 84 distinct queries in one session hold far more than 100 generated
-      // classes; the default static codegen cache would recompile across
-      // queries (round-4 finding — see etl.Pipeline and PERFORMANCE.md)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // sub-humongous Tungsten pages for G1 (see etl.Pipeline: 16m is
-      // ≥ half a G1 region at any heap ≤ 64 GiB and lands in old gen)
-      .config("spark.buffer.pageSize", "2m")
-      .config("spark.hadoop.io.file.buffer.size", "1048576")
-      // the r16 driver-side listing threshold for manifest-named file
-      // lists moved into the engine (SnapshotTable.ensureDriverListing,
-      // VERDICT r16 #1), so Verify / sbt test / library consumers get
-      // it too; SPARK_GRAFT_LIST_THRESHOLD still tunes it
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start("graft-bench")
 
-    def runOnce(name: String): Double = {
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          return -1.0
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
+    def runOnce(name: String): Double = runNoop(spark, sfDir, name, "bench")
 
     // warm-up: JVM + codegen + parquet footer caches — touch every table
     // so the alphabetically-first query of each family doesn't absorb its
@@ -134,12 +118,7 @@ object Bench {
         case e: Throwable =>
           System.err.println(s"[bench] etl failed: ${e.getMessage}"); -1.0
       }
-      // clean up the throwaway output tree
-      try {
-        java.nio.file.Files.walk(etlOut)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
+      Tables.deleteTree(etlOut.toFile) // the throwaway output tree
       secs
     }
     val etlSecs = etlDraws.filter(_ >= 0) match {

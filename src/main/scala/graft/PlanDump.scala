@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan-capture aid for the optimization rounds: writes
@@ -8,7 +7,7 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: tools/run.sh graft.PlanDump <sfDir> <outDir> <tag> <q1,q2,...>
   *
-  * Runs with the SAME session configuration as [[Bench]] so the captured
+  * Runs under the same [[GraftSession]] as [[Bench]] so the captured
   * plan (join strategy, exchange count, AQE wrapping) is the plan the
   * bench actually executes. Gate-style queries whose builders run eagerly
   * (lakehouse/streaming) execute their setup; the captured plan is the
@@ -18,19 +17,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, tag, qlist) = args.take(4)
     val names = qlist.split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.buffer.pageSize", "2m")
-      .config("spark.hadoop.io.file.buffer.size", "1048576")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start("graft-plandump")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
       try {

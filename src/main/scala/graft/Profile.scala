@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Single-query wall-clock decomposition for the optimization rounds:
   * runs each named query once through the noop sink (the Bench timing
@@ -17,22 +16,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, qlist) = args.take(2)
     val names = qlist.split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-profile")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.buffer.pageSize", "2m")
-      .config("spark.hadoop.io.file.buffer.size", "1048576")
-      // driver-side listing for manifest-named lists now lives in the
-      // engine (SnapshotTable.ensureDriverListing, VERDICT r16 #1) so
-      // Verify and library consumers get it too
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start("graft-profile")
 
     final case class JobRec(id: Int, desc: String, start: Long,
       var end: Long = 0L, var tasks: Int = 0, var taskMs: Long = 0L,
@@ -69,21 +53,12 @@ object Profile {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    // warm-up identical to Bench
-    try SparkEntry.queries("q1_agg")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    catch { case e: Throwable => System.err.println(s"warmup: ${e.getMessage}") }
+    Bench.runNoop(spark, sfDir, "q1_agg", "profile") // warm-up, as in Bench
 
     names.foreach { n =>
       jobs.clear(); stageToJob.clear()
       val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(n)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[profile] $n failed: ${e.getMessage}")
-      }
+      Bench.runNoop(spark, sfDir, n, "profile")
       val wallMs = (System.nanoTime() - t0) / 1e6
       // serialize: job spans sorted by start; gaps = wall - union(spans)
       val recs = {

@@ -60,4 +60,42 @@ object Tables {
     if (df.rdd.getNumPartitions >= target) df
     else df.repartition(target, org.apache.spark.sql.functions.col(keyCol))
   }
+
+  /** [[conditionalSpread]] of the documents scan by `doc_id`, before the
+    * CPU-heavy per-row stages of the text, dedup and multimodal families
+    * (tokenize, shingle, md5 base hashes, typed media decode). Single-task
+    * on the one-row-group bench corpus, these measured 9.8 s for d81's
+    * shingle persist at sf0.1 (~0.5 s spread over 32) and two 1.5–1.7 s
+    * single-task jobs for m236. Their values are per-row or integer-exact.
+    * NOT applied to the scan-shaped text queries PlanAuditSpec pins to
+    * ≤1 Exchange (t33/t69/t70/t72/t73/t74/t113). */
+  def documentsSpread(s: SparkSession, d: String): DataFrame =
+    conditionalSpread(s, documents(s, d), "doc_id")
+
+  /** Recursive delete of a local file or directory tree; absent is a no-op. */
+  private[graft] def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteTree)); f.delete(): Unit
+  }
+
+  /** Register a recursive delete-at-JVM-exit for `dir`, once per path —
+    * repeated gate invocations in one session reuse the same dir and the
+    * same hook (ADVICE r9: the old per-call temp dirs leaked). */
+  private val cleanupRegistered = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private[graft] def cleanupOnExit(dir: java.io.File): Unit =
+    if (cleanupRegistered.add(dir.getAbsolutePath))
+      Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(dir)))
+
+  /** Deterministic per-(name, sf) gate directory `graft_<name>_<sf>` under
+    * the JVM temp dir: wiped at call start, registered for JVM-exit
+    * deletion, and returned existing and empty. Repeated dual-scale
+    * sweeps reuse ONE location per gate instead of accumulating a fresh
+    * table/checkpoint tree per invocation (VERDICT r15 #3), table version
+    * numbers stay deterministic, and a reused streaming CHECKPOINT can
+    * never resume a prior sweep's state. */
+  private[graft] def gateDir(name: String, d: String): java.nio.file.Path = {
+    val f = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_${name}_${d.replaceAll("[^A-Za-z0-9]", "_")}")
+    deleteTree(f); cleanupOnExit(f); f.mkdirs()
+    f.toPath
+  }
 }

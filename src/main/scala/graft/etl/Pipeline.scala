@@ -48,39 +48,7 @@ object Pipeline {
   def main(args: Array[String]): Unit = {
     val rawPath = if (args.length > 0) args(0) else "/root/reference/data/raw"
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_etl_out"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false") // parity mode (H5)
-      .config("spark.ui.enabled", "false")
-      // The 14 output tables export CONCURRENTLY, and their distinct plans
-      // carry well over 100 generated classes between them — the default
-      // codegen cache (spark.sql.codegen.cache.maxEntries=100, static)
-      // then misses on nearly every task and Janino recompiles per task:
-      // measured 343 s → 51 s at the 10,000× scale rung from this one
-      // setting (round-4 finding, PERFORMANCE.md). Harmless when unneeded
-      // (it is an upper bound, not a reservation).
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // Tungsten pages must stay BELOW half a G1 region or every sort
-      // page is a humongous allocation (G1 regions: heap/2048, so 16 MiB
-      // at a 31 GiB heap, 32 MiB at 64 GiB; humongous = ≥ half region).
-      // Spark's auto page (up to 64 MiB on big heaps) and the first
-      // attempt at a fix (16m — still ≥ half of any region ≤ 32 MiB) both
-      // land humongous: old-gen fills with page allocations and G1 churns
-      // concurrent marks (measured: old gen pinned at 99.9% during sorts,
-      // nondeterministic multi-minute stalls). 2m is sub-humongous for
-      // every heap ≥ 8 GiB and sorters address 8192 pages × 2 MiB = 16 GiB
-      // per consumer — far above any task's need.
-      .config("spark.buffer.pageSize", "2m")
-      // All local-FS streams (CSV/parquet part writes, the golden concat's
-      // source reads) default to io.file.buffer.size=4096 — 4 KiB write
-      // syscalls under the CRC layer (measured 11 MB/s on the golden
-      // concat). 1 MiB buffers make every stream sequential-IO-sized.
-      .config("spark.hadoop.io.file.buffer.size", "1048576")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start("graft-etl")
     val t0 = System.nanoTime()
     Pipeline.build(spark, rawPath) match {
       case Left(err) => System.err.println(s"pipeline failed: $err"); sys.exit(1)

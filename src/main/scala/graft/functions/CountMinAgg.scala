@@ -11,9 +11,11 @@ import org.apache.spark.sql.types._
 /** Shared count-min hashing: row i's bucket for item x is
   * (h1 + i·h2) mod width (Kirsch–Mitzenmacher double hashing — two
   * 64-bit mixes generate all depth rows with pairwise-independence
-  * guarantees good enough for CM error bounds). splitmix64 is the same
-  * finalizer family the repo's other deterministic hashes use. */
-private[functions] object CountMin {
+  * guarantees good enough for CM error bounds). splitmix64 is the one
+  * copy of the finalizer every deterministic hash in the engine uses
+  * (MinHash seeds and mixes, d41/s43 hyperplanes); the d39/s43 DuckDB
+  * oracles inline the same constants. */
+private[graft] object CountMin {
   def splitmix64(seed: Long): Long = {
     var z = seed + 0x9e3779b97f4a7c15L
     z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L

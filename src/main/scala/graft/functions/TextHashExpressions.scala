@@ -97,16 +97,9 @@ case class MinHashSignature(left: Expression, right: Expression)
 object MinHashSignature {
   val MaxPerms = 64
 
-  def splitmix64(seed: Long): Long = {
-    var z = seed + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d4a2965f57d6e3L
-    z ^ (z >>> 31)
-  }
-
   /** Per-permutation xor seeds, fixed for determinism across runs (and
     * inlined as constants into the DuckDB oracle). */
-  val seeds: Array[Long] = Array.tabulate(MaxPerms)(i => splitmix64(0x5eedL + i))
+  val seeds: Array[Long] = Array.tabulate(MaxPerms)(i => CountMin.splitmix64(0x5eedL + i))
 
   /** Signature = per-permutation min over the pre-hashed shingle array.
     * Empty arrays yield all-Long.MaxValue (no shingles → no collisions). */
@@ -120,7 +113,7 @@ object MinHashSignature {
         val base = hashes.getLong(j)
         var i = 0
         while (i < n) {
-          val v = splitmix64(base ^ seeds(i))
+          val v = CountMin.splitmix64(base ^ seeds(i))
           if (v < mins(i)) mins(i) = v
           i += 1
         }

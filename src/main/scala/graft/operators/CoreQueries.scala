@@ -28,20 +28,6 @@ object CoreQueries {
   // revenue expression used by several queries (TPC-H style)
   private def revenue: Column = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
 
-  /** Register a recursive delete-at-JVM-exit for `dir`, once per path —
-    * repeated q204 invocations in one session reuse the same staging dir
-    * and the same hook (ADVICE r9: the old per-call temp dirs leaked). */
-  private val cleanupRegistered = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private[graft] def cleanupOnExit(dir: java.io.File): Unit =
-    if (cleanupRegistered.add(dir.getAbsolutePath)) {
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(dir)
-      }))
-    }
-
   /** Multiset equality of two same-schema frames — the gates' relation-
     * identity probe. PROVABLY the same boolean as the old two-way
     * `a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty` (multisets are
@@ -102,15 +88,8 @@ object CoreQueries {
       val base = lineitem(s, d)
         .select(col("l_orderkey"), col("l_returnflag"),
           col("l_quantity"), col("l_extendedprice"))
-      // deterministic per-(sf,jvm) location instead of a fresh temp dir per
-      // invocation: repeated gate/bench runs overwrite the same three format
-      // copies rather than leaking one set per call (ADVICE r9); the copies
-      // must outlive this call because the returned plan re-reads them lazily.
-      val tmp = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_fmt_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      cleanupOnExit(tmp)
-      val tmpPath = tmp.toString
+      // the copies must outlive this call: the returned plan re-reads them
+      val tmpPath = gateDir("fmt", d).toString
       base.write.mode("overwrite").orc(s"$tmpPath/orc")
       base.write.mode("overwrite").option("header", true).csv(s"$tmpPath/csv")
       base.write.mode("overwrite").json(s"$tmpPath/json")
@@ -149,11 +128,7 @@ object CoreQueries {
       * fan-in cost), which is the SnapshotTable direction. */
     "q262_schema_evolution" -> ((s, d) => {
       val cut = lit("1996-01-01").cast("timestamp")
-      val tmp = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_evo_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      cleanupOnExit(tmp)
-      val tmpPath = tmp.toString
+      val tmpPath = gateDir("evo", d).toString
       orders(s, d).filter(col("o_orderdate") < cut)
         .select("o_orderkey", "o_totalprice")
         .write.mode("overwrite").parquet(s"$tmpPath/v1")
@@ -187,11 +162,7 @@ object CoreQueries {
       * option away — PERMISSIVE + ledger is the production default
       * because silent row loss is unauditable at 100 TB. */
     "q263_corrupt_records" -> ((s, d) => {
-      val tmp = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_corrupt_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      cleanupOnExit(tmp)
-      val tmpPath = tmp.toString
+      val tmpPath = gateDir("corrupt", d).toString
       orders(s, d)
         .select(when(col("o_orderkey") % 19 === 0,
             concat(lit("{\"k\":"), col("o_orderkey"), lit(",\"p\":")))
@@ -297,15 +268,8 @@ object CoreQueries {
     "q264_mv_refresh" -> ((s, d) => {
       import graft.sources.{MaterializedView, SnapshotTable}
       import graft.sources.MaterializedView.AggSpec
-      val srcDir = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_mvsrc_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      val mvDir = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_mv_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(srcDir); rm(mvDir)
-      cleanupOnExit(srcDir); cleanupOnExit(mvDir)
+      val srcDir = gateDir("mvsrc", d)
+      val mvDir = gateDir("mv", d)
       val keys = Seq("o_orderstatus", "o_orderpriority")
       val aggs = Seq(
         AggSpec("count", "", "n_rows"),
@@ -839,15 +803,7 @@ object CoreQueries {
       * the reads are manifest-pruned parquet scans + one aggregate. */
     "q238_time_travel" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_tt_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      // fresh table per invocation: version numbers must be deterministic
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
+      val dir = gateDir("tt", d)
       val base = lineitem(s, d)
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
       SnapshotTable.write(s, dir.toString, base, "l_returnflag")
@@ -876,14 +832,7 @@ object CoreQueries {
       * plus re-staging only the partitions containing matched keys. */
     "q239_merge_upsert" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_mg_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
+      val dir = gateDir("mg", d)
       val base = orders(s, d)
         .select(col("o_orderkey"), col("o_orderpriority").as("prio"),
           col("o_totalprice").as("price"))
@@ -938,14 +887,7 @@ object CoreQueries {
     "q277_compact_vacuum" -> ((s, d) => {
       import graft.sources.SnapshotTable
       import scala.util.Try
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_cv_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
+      val dir = gateDir("cv", d)
       val base = lineitem(s, d)
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
       SnapshotTable.write(s, dir.toString, base, "l_returnflag")
@@ -1010,14 +952,7 @@ object CoreQueries {
       * folds it away. */
     "q287_delete_vectors" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_dv_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
+      val dir = gateDir("dv", d)
       val base = lineitem(s, d)
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
       // two halves → every partition holds ≥2 files, so the final
@@ -1080,14 +1015,7 @@ object CoreQueries {
       * cycle — never a dedicated full-table rewrite. */
     "q291_erasure_proof" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_er_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
+      val dir = gateDir("er", d)
       val base = orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
         col("o_totalprice"), col("o_custkey"))
       val victim = base.agg(min("o_custkey")).first().getLong(0)
@@ -1102,7 +1030,7 @@ object CoreQueries {
       // deliberately BYPASSES the manifest: compliance is about bytes
       // on disk, not about what a well-behaved reader resolves
       def victimRowsRaw(): Long = {
-        val files = Option(dir.listFiles()).getOrElse(Array.empty)
+        val files = Option(dir.toFile.listFiles()).getOrElse(Array.empty)
           .filter(f => f.isDirectory && f.getName.contains("="))
           .flatMap(p => Option(p.listFiles()).getOrElse(Array.empty))
           .filter(f => f.isFile && f.getName.endsWith(".parquet"))
@@ -1117,7 +1045,7 @@ object CoreQueries {
       SnapshotTable.compact(s, dir.toString, "o_orderstatus")
       SnapshotTable.vacuum(s, dir.toString, retain = 1)
       val physGone = victimRowsRaw() == 0L
-      val dvGone = !new java.io.File(dir, "_dv").exists()
+      val dvGone = !dir.resolve("_dv").toFile.exists()
       SnapshotTable.read(s, dir.toString)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_rows"),
@@ -1152,14 +1080,7 @@ object CoreQueries {
       * files regardless of table size. */
     "q290_file_skipping" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_fsk_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
+      val dir = gateDir("fsk", d)
       val base = lineitem(s, d)
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
       SnapshotTable.writeClustered(s, dir.toString, base,
@@ -1206,14 +1127,7 @@ object CoreQueries {
       * planning-time work, never a data pass. */
     "q289_schema_evolution" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_se_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
+      val dir = gateDir("se", d)
       val base = orders(s, d)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       SnapshotTable.write(s, dir.toString, base, "o_orderstatus")
@@ -1261,16 +1175,9 @@ object CoreQueries {
       * reaching zero retires the group exactly as a rebuild would. */
     "q294_mv_change_feed" -> ((s, d) => {
       import graft.sources.{MaterializedView, SnapshotTable}
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_cdf_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
-      val src = new java.io.File(dir, "src").toString
-      val mv = new java.io.File(dir, "mv").toString
+      val dir = gateDir("cdf", d)
+      val src = dir.resolve("src").toString
+      val mv = dir.resolve("mv").toString
       val base = lineitem(s, d).select(col("l_orderkey"), col("l_returnflag"),
         col("l_quantity").cast("long").as("ql"))
       val keys = Seq("l_returnflag")
@@ -1329,14 +1236,7 @@ object CoreQueries {
       * anti-join amortizes into the next routine OPTIMIZE. */
     "q295_update_mor" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_upd_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
+      val dir = gateDir("upd", d)
       val base = lineitem(s, d)
         .select(col("l_orderkey"), col("l_returnflag"),
           col("l_quantity").cast("long").as("q"))
@@ -1401,14 +1301,7 @@ object CoreQueries {
       * costs driver-side manifest arithmetic (q290's contract). */
     "q296_analyze_skipping" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_ana_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
+      val dir = gateDir("ana", d)
       val base = orders(s, d)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val mm = base.agg(min("o_orderkey"), max("o_orderkey")).first()
@@ -1465,14 +1358,7 @@ object CoreQueries {
       * flat; after it, q290's narrow-range contract holds again. */
     "q297_optimize_cluster" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_rcl_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
+      val dir = gateDir("rcl", d)
       val base = lineitem(s, d)
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
       (0 until 4).foreach { i =>
@@ -1530,14 +1416,7 @@ object CoreQueries {
       * table-sized content join. */
     "q298_table_changes" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_cdc_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
+      val dir = gateDir("cdc", d)
       val base = orders(s, d).select(col("o_orderkey").as("k"),
         col("o_orderstatus").as("part"), col("o_totalprice").as("v"))
       SnapshotTable.write(s, dir.toString,
@@ -1591,16 +1470,9 @@ object CoreQueries {
       * the first call. */
     "q302_cdc_replica" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_rep_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
-      val src = new java.io.File(dir, "src").toString
-      val dst = new java.io.File(dir, "dst").toString
+      val dir = gateDir("rep", d)
+      val src = dir.resolve("src").toString
+      val dst = dir.resolve("dst").toString
       val base = orders(s, d).select(col("o_orderkey").as("k"),
         col("o_orderstatus").as("part"), col("o_totalprice").as("v"))
       SnapshotTable.write(s, src, base.filter(col("k") % 2 === 0), "part")
@@ -1657,14 +1529,7 @@ object CoreQueries {
       * the value, at a false-positive tax set by bits-per-file. */
     "q301_bloom_pointlookup" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_blm_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
+      val dir = gateDir("blm", d)
       val base = lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
         col("l_returnflag"), col("l_quantity"))
       (0 until 4).foreach { i =>
@@ -1712,14 +1577,7 @@ object CoreQueries {
       * delta-sized work. */
     "q299_constraints" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_chk_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
+      val dir = gateDir("chk", d)
       val base = orders(s, d).select(col("o_orderkey").as("k"),
         col("o_orderstatus").as("part"), col("o_totalprice").as("v"))
       SnapshotTable.write(s, dir.toString, base, "part")          // v1
@@ -1784,16 +1642,9 @@ object CoreQueries {
       * rows; maintenance costs consumers nothing. */
     "q303_reorg_feed" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_rfd_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
-      val src = new java.io.File(dir, "src").toString
-      val dst = new java.io.File(dir, "dst").toString
+      val dir = gateDir("rfd", d)
+      val src = dir.resolve("src").toString
+      val dst = dir.resolve("dst").toString
       val base = orders(s, d).select(col("o_orderkey").as("k"),
         col("o_orderstatus").as("part"), col("o_totalprice").as("v"))
       SnapshotTable.write(s, src, base.filter(col("k") % 4 === 0), "part") // v1
@@ -1858,16 +1709,9 @@ object CoreQueries {
       * a view rebuild or a base-table scan. */
     "q304_mv_minmax" -> ((s, d) => {
       import graft.sources.{MaterializedView, SnapshotTable}
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_mvx_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
-      val src = new java.io.File(dir, "src").toString
-      val mv = new java.io.File(dir, "mv").toString
+      val dir = gateDir("mvx", d)
+      val src = dir.resolve("src").toString
+      val mv = dir.resolve("mv").toString
       val base = lineitem(s, d).select(col("l_orderkey").as("k"),
         col("l_returnflag").as("part"), col("l_quantity").as("v"))
       val keys = Seq("part")
@@ -1923,16 +1767,9 @@ object CoreQueries {
       * which steady-state cost returns to delta-sized. */
     "q305_replica_reseed" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_rsd_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
-      val src = new java.io.File(dir, "src").toString
-      val dst = new java.io.File(dir, "dst").toString
+      val dir = gateDir("rsd", d)
+      val src = dir.resolve("src").toString
+      val dst = dir.resolve("dst").toString
       val base = orders(s, d).select(col("o_orderkey").as("k"),
         col("o_orderstatus").as("part"), col("o_totalprice").as("v"))
       SnapshotTable.write(s, src, base.filter(col("k") % 3 === 0), "part") // v1
@@ -1994,15 +1831,8 @@ object CoreQueries {
       * staged rows; nothing is ever rewritten or rolled back. */
     "q306_wap" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_wap_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
-      val tbl = new java.io.File(dir, "t").toString
+      val dir = gateDir("wap", d)
+      val tbl = dir.resolve("t").toString
       val base = orders(s, d).select(col("o_orderkey").as("k"),
         col("o_orderstatus").as("part"), col("o_totalprice").as("v"))
       SnapshotTable.write(s, tbl, base.filter(col("k") % 2 === 0), "part") // v1
@@ -2064,15 +1894,8 @@ object CoreQueries {
       * copy — a narrow range on either column touches O(√files). */
     "q308_zorder_optimize" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_zor_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
-      val tbl = new java.io.File(dir, "t").toString
+      val dir = gateDir("zor", d)
+      val tbl = dir.resolve("t").toString
       val base = lineitem(s, d).select(col("l_orderkey"), col("l_partkey"),
         col("l_returnflag"), col("l_quantity"))
       (0 until 3).foreach { i =>
@@ -2141,15 +1964,8 @@ object CoreQueries {
       * shuffle forever. */
     "q313_optimize_reconcile" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_rec_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
-      val tbl = new java.io.File(dir, "t").toString
+      val dir = gateDir("rec", d)
+      val tbl = dir.resolve("t").toString
       val base = lineitem(s, d).select(col("l_orderkey"), col("l_partkey"),
         col("l_returnflag"), col("l_quantity"))
       def chunk(i: Int) = base.filter(col("l_orderkey") % 3 === i)
@@ -2206,15 +2022,8 @@ object CoreQueries {
       * 100 TB table actually runs. */
     "q314_scoped_optimize" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_sco_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
-      val tbl = new java.io.File(dir, "t").toString
+      val dir = gateDir("sco", d)
+      val tbl = dir.resolve("t").toString
       val base = lineitem(s, d).select(col("l_orderkey"),
         col("l_returnflag"), col("l_quantity"))
       def chunk(i: Int) = base.filter(col("l_orderkey") % 3 === i)
@@ -2273,15 +2082,8 @@ object CoreQueries {
       * constraint validation, skipped here (none registered). */
     "q309_restore" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_rst_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
-      val tbl = new java.io.File(dir, "t").toString
+      val dir = gateDir("rst", d)
+      val tbl = dir.resolve("t").toString
       val base = lineitem(s, d).select(col("l_orderkey"),
         col("l_returnflag"), col("l_quantity"))
       SnapshotTable.write(s, tbl, base.filter(col("l_orderkey") % 3 === 0),
@@ -2339,15 +2141,8 @@ object CoreQueries {
       * over each commit's own files. */
     "q310_ingest_stats" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_ist_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
-      val tbl = new java.io.File(dir, "t").toString
+      val dir = gateDir("ist", d)
+      val tbl = dir.resolve("t").toString
       val base = lineitem(s, d).select(col("l_orderkey"), col("l_partkey"),
         col("l_returnflag"), col("l_quantity"))
       val r0 = base.agg(min(col("l_orderkey")).cast("long"),
@@ -2414,15 +2209,8 @@ object CoreQueries {
       * the corpus. */
     "q311_string_skipping" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_sst_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
-      val tbl = new java.io.File(dir, "t").toString
+      val dir = gateDir("sst", d)
+      val tbl = dir.resolve("t").toString
       val base = documents(s, d).select(col("doc_id"), col("lang"),
         col("n_chars"),
         date_format(date_add(to_date(lit("2024-01-01")),
@@ -2481,15 +2269,8 @@ object CoreQueries {
       * spread — vs CoW's re-stage of every matched partition. */
     "q312_merge_mor" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_mmr_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
-      val tbl = new java.io.File(dir, "t").toString
+      val dir = gateDir("mmr", d)
+      val tbl = dir.resolve("t").toString
       val base = orders(s, d).select(col("o_orderkey"),
         col("o_orderstatus"), col("o_custkey"))
       val maxKey = base.agg(max(col("o_orderkey")).cast("long"))
@@ -2552,23 +2333,16 @@ object CoreQueries {
       * crowded set; replay cost is marker inspection, not data. */
     "q281_compact_inplace" -> ((s, d) => {
       import graft.sources.Layouts
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_ci_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
+      val dir = gateDir("ci", d)
       val base = lineitem(s, d)
         .select("l_orderkey", "l_returnflag", "l_quantity")
       base.repartition(40).write.mode("overwrite").parquet(dir.toString)
-      def files: Array[java.io.File] = Option(dir.listFiles())
+      def files: Array[java.io.File] = Option(dir.toFile.listFiles())
         .getOrElse(Array.empty)
         .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       val nBefore = files.length
       val nAfter = Layouts.compactParquet(s, dir.toString)
-      val markers = Option(dir.listFiles()).getOrElse(Array.empty)
+      val markers = Option(dir.toFile.listFiles()).getOrElse(Array.empty)
         .count(f => f.getName.startsWith("_compact_"))
       s.read.parquet(dir.toString)
         .groupBy("l_returnflag")
@@ -2600,14 +2374,7 @@ object CoreQueries {
       * the layout every lakehouse maintains for 2-D range workloads. */
     "q280_zorder_pruning" -> ((s, d) => {
       import graft.sources.Layouts
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_zo_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir)
-      cleanupOnExit(dir)
+      val dir = gateDir("zo", d)
       val base = lineitem(s, d)
         .select("l_partkey", "l_suppkey", "l_returnflag", "l_quantity")
       val meta = Layouts.writeZOrdered(base, dir.toString,
@@ -2675,10 +2442,7 @@ object CoreQueries {
         s.sql(s"DROP TABLE IF EXISTS $t")
         val wh = s.conf.get("spark.sql.warehouse.dir")
           .stripPrefix("file:")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(new java.io.File(wh, t))
+        deleteTree(new java.io.File(wh, t))
       }
       graft.sources.Layouts.writeBucketed(li, "graft_q240_li", 8, Seq("l_orderkey"))
       graft.sources.Layouts.writeBucketed(ord, "graft_q240_ord", 8, Seq("o_orderkey"))
@@ -2706,14 +2470,12 @@ object CoreQueries {
       * the scan-pruning feature that makes date-partitioned layouts
       * work without the user hand-writing partition predicates. */
     "q259_dynamic_pruning" -> ((s, d) => {
-      val stage = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_q259_fact_" + math.abs(d.hashCode).toString)
+      val stage = gateDir("q259_fact", d)
       lineitem(s, d)
         .withColumn("l_month", date_format(col("l_shipdate"), "yyyy-MM"))
         .select(col("l_month"), revenue.as("rev"))
         .write.mode("overwrite").partitionBy("l_month")
         .parquet(stage.toString)
-      cleanupOnExit(stage)
       val monthDim = orders(s, d)
         .select(date_format(col("o_orderdate"), "yyyy-MM").as("m_month"),
           concat(year(col("o_orderdate")).cast("string"), lit("-Q"),

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.CountMin.splitmix64
 
 /** Deduplication operators over `documents` / `embeddings` (builder-prompt
   * north-star surface): exact, n-gram Jaccard (inverted-index similarity
@@ -25,23 +26,6 @@ object DedupQueries {
 
   // ---- shared shingle machinery -------------------------------------
 
-  /** The documents scan spread to full core parallelism BEFORE the
-    * CPU-heavy per-row stages (tokenize → 3-gram shingle strings →
-    * array_distinct → md5 base hashes): the guide's §2.5 "one huge
-    * unsplittable file" case. The bench corpus is a single parquet row
-    * group, so the scan is one task and every downstream projection-stage
-    * consumer (shingleFrame persist, MinHash signatures, exact-verify
-    * sets) serialized on one core — measured 9.8 s single-task for the
-    * d81 shingle persist at sf0.1, ~0.5 s spread over 32. The repartition
-    * is CONDITIONAL on the scan's actual parallelism, so a production
-    * many-file corpus (scan partitions ≥ cores) pays no extra shuffle;
-    * the partitioner is a deterministic hash of doc_id (never rand —
-    * guide §2.5's retry-duplication trap). Downstream values are
-    * partitioning-independent: shingle sets/sizes are per-row, Jaccard
-    * and MinHash derive from integer arithmetic. */
-  private def docsSpread(s: SparkSession, d: String): DataFrame =
-    graft.Tables.conditionalSpread(s, documents(s, d), "doc_id")
-
   /** doc_id + DISTINCT word-3-gram shingle set as an array, one row per
     * doc. Dedup happens per-row via array_distinct INSIDE the scan stage —
     * no shuffle — so every consumer (the Jaccard inverted index, MinHash
@@ -50,7 +34,7 @@ object DedupQueries {
     * free. (The previous explode-then-.distinct() formulation cost one
     * full shuffle per consumer — the measured d38 regression.) */
   private def shingleArrays(s: SparkSession, d: String): DataFrame =
-    docsSpread(s, d)
+    documentsSpread(s, d)
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("t"))
       .select(col("doc_id"),
         array_distinct(when(size(col("t")) >= 3,
@@ -229,14 +213,6 @@ object DedupQueries {
   private val DesignSampleCap = 2100
   private val NumBands = NumPerms / BandRows // 12
 
-  /** SplitMix64 — deterministic per-permutation multipliers/offsets. */
-  private def splitmix64(seed: Long): Long = {
-    var z = seed + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d4a2965f57d6e3L
-    z ^ (z >>> 31)
-  }
-
   /** doc_id + minhash signature array (length NumPerms), via the
     * [[graft.functions.MinHashSignature]] expression: each shingle is
     * base-hashed ONCE (top 15 hex digits of md5 — the same portable
@@ -302,7 +278,7 @@ object DedupQueries {
 
   /** doc_id + 60-bit simhash over term-frequency-weighted token hashes. */
   private def simhashSignatures(s: SparkSession, d: String): DataFrame =
-    simhashFromHashes(docsSpread(s, d)
+    simhashFromHashes(documentsSpread(s, d)
       .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("token"))
       .withColumn("h",
         conv(substring(md5(col("token").cast("binary")), 1, 15), 16, 10).cast("long")))
@@ -506,7 +482,7 @@ object DedupQueries {
   private[graft] def editDistancePairs(s: SparkSession, d: String): DataFrame = {
     val k = 2
     val nseg = k + 1
-    val keyed = docsSpread(s, d)
+    val keyed = documentsSpread(s, d)
       .select(col("doc_id"),
         lower(array_join(slice(split(trim(col("text")), "\\s+"), 1, 6), " ")).as("key"))
       .withColumn("len", length(col("key")))
@@ -944,7 +920,7 @@ object DedupQueries {
     "d112_dup_span_coverage" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val n = 8
-      val tok = docsSpread(s, d)
+      val tok = documentsSpread(s, d)
         .select(col("doc_id"), split(trim(col("text")), "\\s+").as("t"))
         .select(col("doc_id"), size(col("t")).cast("long").as("n_tokens"), col("t"))
       val grams = tok.filter(size(col("t")) >= n)
@@ -997,7 +973,7 @@ object DedupQueries {
         md5(col("doc_id").cast("string").cast("binary")), 1, 4), 16, 10).cast("long")
       val splitCol = when(bucket < 52429L, "train")
         .when(bucket < 58982L, "val").otherwise("test")
-      val pairs = docsSpread(s, d)
+      val pairs = documentsSpread(s, d)
         .select(col("doc_id"), splitCol.as("split"),
           split(trim(col("text")), "\\s+").as("t"))
         .filter(size(col("t")) >= n)
@@ -1206,7 +1182,7 @@ object DedupQueries {
     "d138_substring_dedup" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val k = 8; val w = 43; val minGrams = w // span >= w + k - 1 = 50 tokens
-      val grams = docsSpread(s, d)
+      val grams = documentsSpread(s, d)
         .select(col("doc_id"), split(trim(col("text")), "\\s+").as("t"))
         .filter(size(col("t")) >= k)
         .select(col("doc_id"), explode(expr(
@@ -1348,7 +1324,7 @@ object DedupQueries {
     "d188_normalized_dedup" -> ((s, d) => {
       val norm = trim(regexp_replace(regexp_replace(
         lower(col("text")), "[^a-z0-9 \\t\\n]", ""), "\\s+", " "))
-      docsSpread(s, d)
+      documentsSpread(s, d)
         .select(col("doc_id"),
           md5(norm.cast("binary")).as("norm_md5"),
           md5(col("text").cast("binary")).as("raw_md5"))
@@ -1410,7 +1386,7 @@ object DedupQueries {
     * exact join, so their outputs are identical. */
   private def decontaminate(s: SparkSession, d: String, bloomTier: Boolean): DataFrame = {
     val G = 13
-    val tok = docsSpread(s, d)
+    val tok = documentsSpread(s, d)
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("t"))
     def grams(df: DataFrame) = df
       .filter(size(col("t")) >= G)

@@ -17,23 +17,6 @@ object EventQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Deterministic per-(name, sf) gate directory: wiped at call start
-    * and registered for JVM-exit deletion, so the repeated dual-scale
-    * sweeps reuse ONE /tmp location per gate instead of accumulating a
-    * fresh table/checkpoint tree per invocation (VERDICT r15 #3 — the
-    * q204 `freshDir` convention, shared). Wiping at call start also
-    * guarantees a reused streaming CHECKPOINT can never resume a prior
-    * sweep's state. */
-  private def gateDir(name: String, d: String): java.nio.file.Path = {
-    val f = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_${name}_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-    def rm(x: java.io.File): Unit = {
-      Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(): Unit
-    }
-    rm(f); CoreQueries.cleanupOnExit(f); f.mkdirs()
-    f.toPath
-  }
-
   val queries: Map[String, Q] = Map(
     /** JSON scalar extraction (get_json_object) + aggregate over the
       * extracted field. */
@@ -421,23 +404,14 @@ object EventQueries {
       import graft.sources.MaterializedView
       import graft.sources.MaterializedView.AggSpec
       import graft.streaming.EventStream
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      def freshDir(name: String): java.io.File = {
-        val f = new java.io.File(sys.props("java.io.tmpdir"), s"graft_${name}_$tag")
-        def rm(x: java.io.File): Unit = {
-          Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(): Unit
-        }
-        rm(f); CoreQueries.cleanupOnExit(f); f
-      }
-      val srcA = freshDir("smv_a"); val srcB = freshDir("smv_b")
-      val tbl = freshDir("smv_tbl"); val mv = freshDir("smv_mv")
-      srcA.mkdirs(); srcB.mkdirs()
+      val srcA = gateDir("smv_a", d); val srcB = gateDir("smv_b", d)
+      val tbl = gateDir("smv_tbl", d); val mv = gateDir("smv_mv", d)
       val base = events(s, d).withColumn("ts", col("ts").cast("timestamp"))
       EventStream.writeEventsFile(base.filter(col("event_id") % 3 =!= 0),
-        srcA.toPath, "a")
+        srcA, "a")
       EventStream.writeEventsFile(base.filter(col("event_id") % 3 === 0),
-        srcB.toPath, "b")
-      def ingest(srcDir: java.io.File, queryId: String): Unit =
+        srcB, "b")
+      def ingest(srcDir: java.nio.file.Path, queryId: String): Unit =
         EventStream.runToSnapshotTable(
           s.readStream.schema(EventStream.streamSchema)
             .parquet(srcDir.toString)

@@ -50,18 +50,6 @@ object MultimodalQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** The documents scan spread to core parallelism before a CPU-heavy
-    * per-row mapPartitions decode (r16, guide §2.5 unsplittable-input
-    * case): the bench corpus is one parquet row group, so a typed decode
-    * pipeline otherwise runs as ONE task (profiled: m236 as two
-    * single-task 1.5–1.7 s jobs). Conditional on the scan's actual
-    * parallelism — a many-file production blob store already scans wide
-    * and skips the shuffle; deterministic hash of doc_id (guide §2.5's
-    * rand-repartition retry trap); decode is per-row deterministic, so
-    * values are partitioning-independent. */
-  private def docsSpread(s: SparkSession, d: String): DataFrame =
-    graft.Tables.conditionalSpread(s, documents(s, d), "doc_id")
-
   /** One media record: payload + metadata. Built from `documents` text
     * bytes, standing in for image/audio blobs. */
   case class MediaRecord(doc_id: Long, media: Array[Byte], media_type: String)
@@ -490,7 +478,7 @@ object MultimodalQueries {
       * petabyte blob stores (ranged 12-byte reads). */
     "m236_mime_sniff" -> ((s, d) => {
       import s.implicits._
-      docsSpread(s, d).select(col("doc_id")).as[Long]
+      documentsSpread(s, d).select(col("doc_id")).as[Long]
         .mapPartitions { it =>
           it.map { id =>
             val payload: Array[Byte] = (id % 3) match {
@@ -535,7 +523,7 @@ object MultimodalQueries {
       * doc; no shuffle before the presentation sort. */
     "m229_image_contrast" -> ((s, d) => {
       import s.implicits._
-      docsSpread(s, d).filter(col("doc_id") % 3 === 0)
+      documentsSpread(s, d).filter(col("doc_id") % 3 === 0)
         .select(col("doc_id")).as[Long]
         .mapPartitions { it =>
           it.map { id =>
@@ -569,7 +557,7 @@ object MultimodalQueries {
 
     "m213_image_phash" -> ((s, d) => {
       import s.implicits._
-      val fp = docsSpread(s, d).filter(col("doc_id") % 3 === 0)
+      val fp = documentsSpread(s, d).filter(col("doc_id") % 3 === 0)
         .select(col("doc_id")).as[Long]
         .mapPartitions { it =>
           it.map { id =>

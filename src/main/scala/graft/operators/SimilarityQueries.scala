@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.CountMin.splitmix64
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (builder-prompt north-star surface).
@@ -3116,12 +3117,6 @@ object SimilarityQueries {
 /** Deterministic pseudo-random hyperplanes for s43: 16 planes × 64 dims,
   * components in [-1, 1) derived from splitmix64(p * 64 + dim). */
 private object Hyperplanes {
-  private def splitmix64(seed: Long): Long = {
-    var z = seed + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d4a2965f57d6e3L
-    z ^ (z >>> 31)
-  }
   val planes: Array[Array[Double]] =
     Array.tabulate(16, 64)((p, i) => splitmix64(p * 64L + i).toDouble / Long.MaxValue.toDouble)
 }

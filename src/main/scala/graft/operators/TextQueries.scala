@@ -16,22 +16,6 @@ object TextQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** The documents scan spread to core parallelism before CPU-heavy
-    * per-row stages (tokenize / n-gram explode / per-row marker scans) —
-    * r16, guide §2.5 unsplittable-input case: the bench corpus is one
-    * parquet row group, so these stages otherwise serialize on one task.
-    * Conditional on the scan's actual parallelism (a many-file corpus
-    * skips the shuffle); deterministic doc_id hash partitioning; the
-    * spread sites' downstream aggregates are integer-exact or per-row,
-    * so values are partitioning-independent. NOT applied to the
-    * scan-shaped queries PlanAuditSpec pins to ≤1 Exchange (t33/t69/t70/
-    * t72/t73/t74/t113): their contract is "no shuffle before the
-    * presentation sort" — one task on a one-row-group bench input is the
-    * honest price of that shape, and at scale the scan parallelizes
-    * naturally. */
-  private def docsSpread(s: SparkSession, d: String): DataFrame =
-    graft.Tables.conditionalSpread(s, documents(s, d), "doc_id")
-
   private def toks(c: Column): Column = split(trim(c), "\\s+")
 
   /** Language marker token lists. The scoring formula (count of marker
@@ -101,7 +85,7 @@ object TextQueries {
           when(sc > acc.getField("score"),
             struct(sc.as("score"), lit(l).as("lang"))).otherwise(acc)
       }
-      docsSpread(s, d)
+      documentsSpread(s, d)
         .select(col("doc_id"), col("lang"), toks(col("text")).as("t"))
         .select(col("doc_id"), col("lang"), best.getField("lang").as("predicted_lang"))
         .groupBy("lang", "predicted_lang")
@@ -262,7 +246,7 @@ object TextQueries {
       * would be shuffle-free but O(distinct·len) per doc — quadratic on a
       * repetitive doc, i.e. worst exactly where this filter matters.) */
     "t85_repetition" -> ((s, d) => {
-      val tok = docsSpread(s, d).select(col("doc_id"), toks(col("text")).as("t"))
+      val tok = documentsSpread(s, d).select(col("doc_id"), toks(col("text")).as("t"))
       val bg = tok.filter(size(col("t")) >= 2)
         .select(col("doc_id"), explode(
           expr("transform(sequence(0, size(t)-2), i -> concat(t[i], ' ', t[i+1]))")).as("g"))
@@ -362,7 +346,7 @@ object TextQueries {
         length(regexp_replace(col("text"), "\\s+", "")).cast("double") / nTok
       val bucket = conv(substring(
         md5(col("doc_id").cast("string").cast("binary")), 1, 4), 16, 10).cast("long")
-      val derived = docsSpread(s, d)
+      val derived = documentsSpread(s, d)
         .select(col("doc_id"), col("n_chars"), col("text"), toks(col("text")).as("t"))
         .select(col("doc_id"),
           best.getField("lang").as("predicted_lang"),
@@ -381,7 +365,7 @@ object TextQueries {
       // explode, counted per (doc, kind, gram) then rolled per doc with
       // conditional aggregates (same integer counts, same fractions)
       val emptyKg = expr("CAST(array() AS array<struct<kind:string,g:string>>)")
-      val grams = docsSpread(s, d)
+      val grams = documentsSpread(s, d)
         .select(col("doc_id"), toks(col("text")).as("t"))
         .select(col("doc_id"), explode(concat(
           when(size(col("t")) >= 2, expr(
@@ -588,7 +572,7 @@ object TextQueries {
     "t102_novelty" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val n = 8
-      val grams = docsSpread(s, d)
+      val grams = documentsSpread(s, d)
         .select(col("doc_id"), toks(col("text")).as("t"))
         .filter(size(col("t")) >= n)
         .select(col("doc_id"), explode(expr(
@@ -621,7 +605,7 @@ object TextQueries {
       * barrier the whole gram pipeline would execute twice. */
     "t111_source_overlap" -> ((s, d) => {
       val n = 8
-      val grams = docsSpread(s, d)
+      val grams = documentsSpread(s, d)
         .select(col("source"), toks(col("text")).as("t"))
         .filter(size(col("t")) >= n)
         .select(col("source"), explode(expr(

@@ -9,7 +9,7 @@ import graft.functions.{CosineSimilarity, DotProduct, JaroSimilarity, JaroWinkle
 /** Session-extension entry point: makes the custom expressions available
   * in every session created with
   * `spark.sql.extensions=graft.plans.GraftExtensions` (or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`), so SQL
+  * `GraftSession.builder(app).withExtensions(new GraftExtensions)`), so SQL
   * users get them without any imperative registration call. The runtime
   * alternative for an already-built session is
   * [[graft.functions.VectorFunctions.register]] /

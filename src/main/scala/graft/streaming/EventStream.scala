@@ -341,7 +341,7 @@ object EventStream {
     * one abandoned checkpoint tree per streaming gate run in /tmp). */
   private def ckptDir(): String = {
     val p = java.nio.file.Files.createTempDirectory("graft_ckpt")
-    graft.CoreQueries.cleanupOnExit(p.toFile)
+    graft.Tables.cleanupOnExit(p.toFile)
     p.toString
   }
 

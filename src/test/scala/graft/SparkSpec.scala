@@ -3,16 +3,13 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session fixture: one local session per suite, UTC, parity-mode
-  * ANSI off (SURVEY H5), small shuffle partition count for test scale. */
+/** Shared session fixture: one local session per suite, built by
+  * [[GraftSession]] with only the test-scale overrides (4 cores, 4
+  * shuffle partitions) — every SQL semantic setting is the engine's. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = GraftSession.builder(getClass.getSimpleName)
     .master("local[4]")
-    .appName(getClass.getSimpleName)
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   val sf: String = "/root/testdata/sf0.001"
