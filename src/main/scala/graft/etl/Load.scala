@@ -1,16 +1,15 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Stage 5 — Load (S4-S5; ref: src/etl_functions.py:396-439).
   *
-  * Writes all 14 tables as headered CSV and Parquet. Outputs are ordered
-  * by their natural keys before writing (hazard H1 — pandas groupby
-  * orders by key, Spark groupBy doesn't) and coalesced to one file to
-  * match the reference's single-file-per-table layout. At 100 TB the
-  * coalesce(1) goes away and the fact partitions by date_id — the sort
-  * keys below already are those partition keys.
+  * Writes all 13 tables as Parquet and as one headered CSV file each. The
+  * CSV is the one ordered sink: rows sorted by natural keys (hazard H1 —
+  * pandas groupby orders by key, Spark groupBy doesn't) in a single file,
+  * the reference's layout. Parquet is unsorted by design: it has no
+  * row-order contract (S5). At 100 TB see [[writeAtScale]].
   */
 object Load {
 
@@ -33,11 +32,19 @@ object Load {
   def allTables(star: StarSchema, aggs: AggTables): Map[String, DataFrame] =
     star.dims ++ aggs.byName + ("fact_sales" -> star.factSales)
 
+  /** Runs `body` with every Spark job it launches from this thread
+    * described as `desc`, so event logs name the layer and table. */
+  private[etl] def described[T](spark: SparkSession, desc: String)(body: => T): T = {
+    spark.sparkContext.setJobDescription(desc)
+    try body finally spark.sparkContext.setJobDescription(null)
+  }
+
   def writeAll(star: StarSchema, aggs: AggTables, outDir: String): Unit = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    // Share the transformed frames across the 14 exports (the round-3
+    val spark = star.factSales.sparkSession
+    // Share the transformed frames across the 13 exports (the round-3
     // 100,000× lever — BASELINE.md's [load] itemization showed every
     // parquet sink re-running its joins over the raw input): the fact
     // feeds 7 outputs (itself + 6 aggregates) and each DIMENSION feeds
@@ -51,18 +58,16 @@ object Load {
     // cached partitions and duplicate the work. Dims materialize
     // concurrently — each count is an independent job.
     val tAll = System.nanoTime()
-    val share = sys.env.getOrElse("SPARK_GRAFT_ETL_SHARE", "on") != "off"
-    val shared = if (share) star.dims.values.toSeq :+ star.factSales else Nil
+    val shared = star.dims.values.toSeq :+ star.factSales
     shared.foreach(_.persist())
-    Await.result(Future.sequence(shared.map(df => Future(df.count()))), Duration.Inf)
-    if (share) System.err.println(
+    Await.result(Future.sequence(shared.map(df =>
+      Future(described(spark, "etl.load cache")(df.count())))), Duration.Inf)
+    System.err.println(
       f"[load] cache materialization ${(System.nanoTime() - tAll) / 1e9}%.1fs")
-    if (share) {
-      val sc = star.factSales.sparkSession.sparkContext
-      sc.getRDDStorageInfo.foreach { i =>
-        System.err.println(s"[load] cached ${i.name} parts=${i.numCachedPartitions}/" +
-          s"${i.numPartitions} mem=${i.memSize / 1048576}MB disk=${i.diskSize / 1048576}MB")
-      }
+    val storage = spark.sparkContext.getRDDStorageInfo
+    storage.foreach { i =>
+      System.err.println(s"[load] cached ${i.name} parts=${i.numCachedPartitions}/" +
+        s"${i.numPartitions} mem=${i.memSize / 1048576}MB disk=${i.diskSize / 1048576}MB")
     }
     // Bounded export concurrency, sized by the MEASURED data scale
     // (SPARK_GRAFT_ETL_POOL overrides): at golden scale the 26 exports
@@ -74,11 +79,8 @@ object Load {
     // 13 s isolated (round-4 timeline, PERFORMANCE.md); two-wide was the
     // measured optimum (221 s vs 420 s four-wide, 1045 s serial includes
     // the pre-fix concat). The switch reads the just-materialized cache
-    // footprint from the block manager — metadata, no extra job; with
-    // sharing disabled (debug path) it falls back to wide.
-    val cachedBytes =
-      star.factSales.sparkSession.sparkContext.getRDDStorageInfo
-        .map(i => i.memSize + i.diskSize).sum
+    // footprint from the block manager — metadata, no extra job.
+    val cachedBytes = storage.map(i => i.memSize + i.diskSize).sum
     val poolSize = sys.env.get("SPARK_GRAFT_ETL_POOL").map(_.toInt)
       .getOrElse(if (cachedBytes > (2L << 30)) 2 else 13)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
@@ -86,48 +88,34 @@ object Load {
     try {
       // independent output tables write concurrently; Spark schedules the
       // jobs side by side (26 tiny jobs serially = pure scheduling latency)
-      // builder iteration aid: restrict to named tables (comma-separated)
-      val onlyTables = sys.env.get("SPARK_GRAFT_ETL_ONLY")
-        .map(_.split(",").map(_.trim).toSet)
-      val jobs = allTables(star, aggs).toSeq
-        .filter { case (name, _) => onlyTables.forall(_.contains(name)) }
-        .map { case (name, df) =>
+      val jobs = allTables(star, aggs).toSeq.map { case (name, df) =>
         Future {
-          // Both sinks run the range-partitioned sort fully DISTRIBUTED
-          // and write in parallel; nothing is cached and no task ever
-          // holds a whole table. History of this path (both prior
-          // formulations measured on the BASELINE.md scale ladder):
+          // One sort per table, for the CSV, range-partitioned and fully
+          // DISTRIBUTED (no task holds a whole table). The CSV reads back
+          // the parquet just written, with the frame's own schema (no
+          // inference job), instead of re-running the table's upstream
+          // joins over the raw input (most of the load stage at the 9.5 GB
+          // baseline scale). Rejected formulations:
           //  - orderBy(...).coalesce(1) collapsed the SORT itself into
           //    the single writer task — minutes of single-core spill-sort
           //    per GB-scale table at 100,000× (most of that run's 36 min);
           //  - sorting into a persisted cache and coalescing only for the
           //    write fixed 100,000× but thrashed at 10,000×: fourteen
           //    concurrent full-table caches exceed storage memory and the
-          //    single writer task re-reads spilled blocks (282 s vs 55 s).
-          // The ordered SINGLE-FILE artifact (S4/T2 golden contract) is
-          // produced by byte-concatenating the sorted CSV parts in
-          // partition order — pure sequential IO, no parse, no sort, no
-          // cache. The sort keys are unique per table, so the distributed
-          // sort is row-identical to a single-task sort. Parquet stays a
-          // directory of sorted parts: Spark writers always emit
-          // directories, and parquet has no cross-file read-order
-          // contract a single part could provide.
+          //    single writer task re-reads spilled blocks (282 s vs 55 s);
+          //  - one persisted sorted frame feeding both sinks: AQE cannot
+          //    coalesce a cached plan, so every table wrote 32 parts.
           val t0 = System.nanoTime()
-          val sorted = df.orderBy(sortKeys(name).map(col): _*)
-          sorted.write.mode("overwrite").parquet(s"$outDir/parquet/$name")
+          val path = s"$outDir/parquet/$name"
+          described(spark, s"etl.load $name parquet") {
+            df.write.mode("overwrite").parquet(path)
+          }
           val t1 = System.nanoTime()
-          // The CSV derives from the parquet just written, not from the
-          // table's plan: each sink otherwise re-executes the table's
-          // full upstream DAG (scan+joins over the whole raw input — at
-          // the 9.5 GB baseline scale that redundancy was most of the
-          // load stage), while re-reading the columnar output costs a
-          // fraction of that. Types round-trip exactly (timestamps are
-          // already µs-truncated), so the CSV bytes are unchanged; the
-          // re-sort is needed because parquet reads carry no cross-file
-          // order guarantee.
-          val back = df.sparkSession.read.parquet(s"$outDir/parquet/$name")
-            .orderBy(sortKeys(name).map(col): _*)
-          writeOrderedCsv(back, df.columns.toSeq, s"$outDir/csv/$name")
+          described(spark, s"etl.load $name csv") {
+            val back = spark.read.schema(df.schema).parquet(path)
+              .orderBy(sortKeys(name).map(col): _*)
+            writeOrderedCsv(back, df.columns.toSeq, s"$outDir/csv/$name")
+          }
           // per-table cost itemization (stderr keeps the stdout report
           // line contract clean); start/end are seconds since writeAll
           // entry so concurrent-phase overlap is reconstructible from the

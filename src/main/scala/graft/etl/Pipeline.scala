@@ -26,22 +26,19 @@ object Pipeline {
     build(spark, rawPath).map { r => exportAll(spark, r, outDir); r }
 
   /** The one export step (shared by [[run]] and [[main]]): all 26 table
-    * sinks, the S9 instructions file, the S8 dashboard PNGs. Chart
-    * series derive from the agg PARQUET just written, not from the agg
-    * plans: writeAll has unpersisted the shared frames by the time the
-    * charts render, so the logical plans would re-run their full
-    * upstream joins over the raw input — measured ~15 s of the
-    * 10,000×-scale run (round-12 ladder re-measure root cause; the same
-    * redundancy the CSV-from-parquet derivation in Load closed in round
-    * 3). Reading the columnar output back costs milliseconds and the
-    * values are identical by construction. */
+    * sinks, the S9 instructions file, the S8 dashboard PNGs. The four
+    * chart inputs read back the agg PARQUET just written (with the plans'
+    * schemas, so no inference job runs): writeAll has unpersisted the
+    * shared frames by then, so the agg plans would re-run their upstream
+    * joins over the raw input — measured ~15 s of the 10,000×-scale run
+    * (round-12 ladder re-measure root cause). */
   private def exportAll(spark: SparkSession, r: Result, outDir: String): Unit = {
     Load.writeAll(r.star, r.aggs, outDir)
     Instructions.write(outDir)
     Charts.writeDashboard(
-      r.aggs.byName.map { case (n, _) =>
-        n -> spark.read.parquet(s"$outDir/parquet/$n")
-      },
+      Charts.Inputs.map { n =>
+        n -> spark.read.schema(r.aggs.byName(n).schema).parquet(s"$outDir/parquet/$n")
+      }.toMap,
       java.nio.file.Paths.get(outDir, "reports", "dashboard").toString)
   }
 

@@ -31,16 +31,11 @@ import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType}
   */
 object BloomFunctions {
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_filter_agg", exprs =>
-        new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "might_contain", exprs => BloomFilterMightContain(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_probe", exprs => BloomProbe(exprs(0), exprs(1)),
-      "built-in")
+    Registration.registerOnce(spark, "bloom_filter_agg", exprs =>
+      new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)).toAggregateExpression())
+    Registration.registerOnce(spark, "might_contain", exprs =>
+      BloomFilterMightContain(exprs(0), exprs(1)))
+    Registration.registerOnce(spark, "bloom_probe", exprs => BloomProbe(exprs(0), exprs(1)))
   }
 }
 

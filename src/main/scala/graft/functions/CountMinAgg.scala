@@ -156,13 +156,9 @@ object CountMinAgg {
     * foldable literals and must match between build and probe. */
   def register(spark: SparkSession): Unit = {
     def lit(e: Expression): Int = e.eval(null).asInstanceOf[Number].intValue()
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "count_min_agg", exprs =>
-        CountMinAgg(exprs(0), lit(exprs(1)), lit(exprs(2))).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cms_estimate", exprs =>
-        CmsEstimate(exprs(0), exprs(1), lit(exprs(2)), lit(exprs(3))),
-      "built-in")
+    Registration.registerOnce(spark, "count_min_agg", exprs =>
+      CountMinAgg(exprs(0), lit(exprs(1)), lit(exprs(2))).toAggregateExpression())
+    Registration.registerOnce(spark, "cms_estimate", exprs =>
+      CmsEstimate(exprs(0), exprs(1), lit(exprs(2)), lit(exprs(3))))
   }
 }

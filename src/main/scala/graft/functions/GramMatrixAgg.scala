@@ -94,10 +94,8 @@ object GramMatrixAgg {
   /** Register gram_matrix_agg(qvec, dim) — dim must be a foldable literal;
     * qvec is array<long> (quantize floats first: exactness is the point). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gram_matrix_agg", exprs =>
-        GramMatrixAgg(exprs(0),
-          exprs(1).eval(null).asInstanceOf[Number].intValue())
-          .toAggregateExpression(),
-      "built-in")
+    Registration.registerOnce(spark, "gram_matrix_agg", exprs =>
+      GramMatrixAgg(exprs(0),
+        exprs(1).eval(null).asInstanceOf[Number].intValue())
+        .toAggregateExpression())
 }

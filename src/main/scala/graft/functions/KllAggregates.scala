@@ -145,20 +145,14 @@ object KllAggregates {
   /** Register kll_sketch_agg(value, k) / kll_merge_agg(sketch, k) /
     * kll_quantile(sketch, rank); k must be a foldable literal. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kll_sketch_agg", exprs =>
-        KllSketchAgg(exprs(0),
-          exprs(1).eval(null).asInstanceOf[Number].intValue())
-          .toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kll_merge_agg", exprs =>
-        KllMergeAgg(exprs(0),
-          exprs(1).eval(null).asInstanceOf[Number].intValue())
-          .toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kll_quantile", exprs => KllQuantile(exprs(0), exprs(1)),
-      "built-in")
+    Registration.registerOnce(spark, "kll_sketch_agg", exprs =>
+      KllSketchAgg(exprs(0),
+        exprs(1).eval(null).asInstanceOf[Number].intValue())
+        .toAggregateExpression())
+    Registration.registerOnce(spark, "kll_merge_agg", exprs =>
+      KllMergeAgg(exprs(0),
+        exprs(1).eval(null).asInstanceOf[Number].intValue())
+        .toAggregateExpression())
+    Registration.registerOnce(spark, "kll_quantile", exprs => KllQuantile(exprs(0), exprs(1)))
   }
 }

@@ -132,10 +132,8 @@ object MisraGriesAgg {
   /** Register misra_gries_agg(key, k) → map<long, long>; probe with
     * element_at(summary, key) (NULL ⇒ estimate 0). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "misra_gries_agg", exprs =>
-        MisraGriesAgg(exprs(0),
-          exprs(1).eval(null).asInstanceOf[Number].intValue())
-          .toAggregateExpression(),
-      "built-in")
+    Registration.registerOnce(spark, "misra_gries_agg", exprs =>
+      MisraGriesAgg(exprs(0),
+        exprs(1).eval(null).asInstanceOf[Number].intValue())
+        .toAggregateExpression())
 }

@@ -69,10 +69,9 @@ object StringSimilarity {
   /** Register both expressions with the session's function registry
     * (same contract as [[VectorFunctions.register]]). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_sim", exprs => JaroSimilarity(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler_sim", exprs => JaroWinklerSimilarity(exprs(0), exprs(1)), "built-in")
+    Registration.registerOnce(spark, "jaro_sim", exprs => JaroSimilarity(exprs(0), exprs(1)))
+    Registration.registerOnce(spark, "jaro_winkler_sim", exprs =>
+      JaroWinklerSimilarity(exprs(0), exprs(1)))
   }
 }
 

@@ -177,25 +177,18 @@ object ThetaAggregates {
   /** Register theta_sketch_agg(key, lgK) / theta_intersect_estimate(a, b)
     * / theta_union_estimate(a, b); lgK must be a foldable literal. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_sketch_agg", exprs =>
-        ThetaSketchAgg(exprs(0),
-          exprs(1).eval(null).asInstanceOf[Number].intValue())
-          .toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_merge_agg", exprs =>
-        ThetaMergeAgg(exprs(0),
-          exprs(1).eval(null).asInstanceOf[Number].intValue())
-          .toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_estimate", exprs => ThetaEstimate(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_intersect_estimate",
-      exprs => ThetaIntersectEstimate(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_union_estimate",
-      exprs => ThetaUnionEstimate(exprs(0), exprs(1)), "built-in")
+    Registration.registerOnce(spark, "theta_sketch_agg", exprs =>
+      ThetaSketchAgg(exprs(0),
+        exprs(1).eval(null).asInstanceOf[Number].intValue())
+        .toAggregateExpression())
+    Registration.registerOnce(spark, "theta_merge_agg", exprs =>
+      ThetaMergeAgg(exprs(0),
+        exprs(1).eval(null).asInstanceOf[Number].intValue())
+        .toAggregateExpression())
+    Registration.registerOnce(spark, "theta_estimate", exprs => ThetaEstimate(exprs(0)))
+    Registration.registerOnce(spark, "theta_intersect_estimate", exprs =>
+      ThetaIntersectEstimate(exprs(0), exprs(1)))
+    Registration.registerOnce(spark, "theta_union_estimate", exprs =>
+      ThetaUnionEstimate(exprs(0), exprs(1)))
   }
 }

@@ -107,10 +107,8 @@ case class TopKByScore(
 object TopKAggregate {
   /** Register topk_by_score(score, id, k) — k must be a foldable literal. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_by_score", exprs =>
-        TopKByScore(exprs(0), exprs(1),
-          exprs(2).eval(null).asInstanceOf[Number].intValue())
-          .toAggregateExpression(),
-      "built-in")
+    Registration.registerOnce(spark, "topk_by_score", exprs =>
+      TopKByScore(exprs(0), exprs(1),
+        exprs(2).eval(null).asInstanceOf[Number].intValue())
+        .toAggregateExpression())
 }

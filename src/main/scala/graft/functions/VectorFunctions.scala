@@ -308,33 +308,25 @@ object VectorFunctions {
 
   /** Register the vector expressions with the session's function registry
     * so they're callable from both the Column DSL (via call_function) and
-    * plain SQL. createOrReplaceTempFunction is itself idempotent (a map
-    * put), so no caching — a session cache would pin SparkSessions
-    * strongly for the JVM's lifetime. */
+    * plain SQL; a function the session already holds is skipped
+    * ([[Registration.registerOnce]]). */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "l2sq", exprs => SquaredL2Distance(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_long", exprs => LongDotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "l2sq_long", exprs => LongSquaredL2(exprs(0), exprs(1)), "built-in")
+    Registration.registerOnce(spark, "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)))
+    Registration.registerOnce(spark, "dot_product", exprs => DotProduct(exprs(0), exprs(1)))
+    Registration.registerOnce(spark, "l2sq", exprs => SquaredL2Distance(exprs(0), exprs(1)))
+    Registration.registerOnce(spark, "dot_long", exprs => LongDotProduct(exprs(0), exprs(1)))
+    Registration.registerOnce(spark, "l2sq_long", exprs => LongSquaredL2(exprs(0), exprs(1)))
     // xxhash64 with an explicit seed (the functions._ wrapper pins seed
     // 42); the seed argument must be a foldable literal. Used for the
     // MinHash permutation family — ANSI-safe, unlike affine (a*h+b)
     // permutations which overflow LongType under ANSI mode.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_min_hash", exprs => RollingMinHash(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_signature", exprs => MinHashSignature(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "xxhash64_seed", exprs =>
-        org.apache.spark.sql.catalyst.expressions.XxHash64(
-          exprs.init, exprs.last.eval(null).asInstanceOf[Number].longValue()),
-      "built-in")
+    Registration.registerOnce(spark, "rolling_min_hash", exprs =>
+      RollingMinHash(exprs(0), exprs(1)))
+    Registration.registerOnce(spark, "minhash_signature", exprs =>
+      MinHashSignature(exprs(0), exprs(1)))
+    Registration.registerOnce(spark, "xxhash64_seed", exprs =>
+      org.apache.spark.sql.catalyst.expressions.XxHash64(
+        exprs.init, exprs.last.eval(null).asInstanceOf[Number].longValue()))
   }
 
   def cosineSim(spark: SparkSession, a: Column, b: Column): Column = {

@@ -5,12 +5,17 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session fixture: one local session per suite, built by
   * [[GraftSession]] with only the test-scale overrides (4 cores, 4
-  * shuffle partitions) — every SQL semantic setting is the engine's. */
+  * shuffle partitions) — every SQL semantic setting is the engine's.
+  * Logs at WARN, as [[GraftSession.start]] does. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = GraftSession.builder(getClass.getSimpleName)
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = GraftSession.builder(getClass.getSimpleName)
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 
   val sf: String = "/root/testdata/sf0.001"
 

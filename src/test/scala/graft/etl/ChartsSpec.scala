@@ -141,4 +141,77 @@ class ChartsSpec extends SparkSpec {
       rm(dir)
     }
   }
+  private def readPng(dir: java.io.File, name: String): Array[Byte] =
+    java.nio.file.Files.readAllBytes(new java.io.File(dir, name).toPath)
+
+  test("chart series: month fold, top-10 cut and order match the Spark formulation") {
+    import spark.implicits._
+    // months repeat across two years; quarter-unit values keep every sum exact
+    val byDate = (for (y <- Seq(2021, 2022); m <- 1 to 12 if y == 2021 || m % 3 != 0)
+      yield (y, m, (m + 2) / 3, 25.25 * ((m * 7 + y) % 13 + 1))).toDF(
+      "year", "month", "quarter", "total_sales").repartition(3)
+    // 14 categories and 12 states: ties on total_sales inside and across
+    // the top-10 cut, one null total (DESC NULLS LAST drops it)
+    val byCat = (Seq("toys", "books", "garden", "auto", "pet_shop", "baby", "housewares",
+      "watches_gifts", "perfumery", "telephony", "sports", "cool_stuff", "Zeta", "ALPHA")
+      .zipWithIndex.map { case (c, i) => (c, Option(Seq(300.0, 120.5, 300.0, 75.0)(i % 4))) } :+
+      (("electronics", None: Option[Double]))).toDF("category_name", "total_sales").repartition(3)
+    val byState = Seq("SP", "RJ", "MG", "RS", "PR", "SC", "BA", "DF", "GO", "ES", "PE", "CE")
+      .zipWithIndex.map { case (st, i) => (st, Seq(900.0, 500.0, 500.0)(i % 3)) }
+      .toDF("state", "total_sales").repartition(3)
+    val byScore = Seq(3, 0, 5, 1, 4, 2).map(sc => (sc.toLong, sc.toLong * 10 + 1))
+      .toDF("review_score", "order_count").repartition(3)
+    val dir = java.nio.file.Files.createTempDirectory("charts_series").toFile
+    try {
+      Charts.writeDashboard(Map(
+        "agg_sales_by_date" -> byDate,
+        "agg_sales_by_category" -> byCat,
+        "agg_sales_by_location" -> byState,
+        "agg_review_metrics" -> byScore), dir.toString)
+
+      // the Spark formulation of the four series
+      val months = Seq("Jan", "Fev", "Mar", "Abr", "Mai", "Jun",
+        "Jul", "Ago", "Set", "Out", "Nov", "Dez")
+      val month = byDate.groupBy("month").agg(sum("total_sales")).orderBy("month")
+        .collect().map(r => (months(r.getInt(0) - 1), r.getDouble(1))).toSeq
+      def top10(df: org.apache.spark.sql.DataFrame, key: String) =
+        df.orderBy(desc("total_sales"), col(key)).limit(10).select(key, "total_sales")
+          .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+      val score = byScore.orderBy("review_score")
+        .select(col("review_score"), col("order_count").cast("double"))
+        .collect().map(r => (r.get(0).toString, r.getDouble(1))).toSeq
+      // seven categories tie at 300.0; the cut falls inside the four-way
+      // tie at 120.5, so the key order decides which three are shown
+      assert(month.size == 12 && top10(byCat, "category_name").map(_._2).count(_ == 120.5) == 3)
+
+      val expected = Seq(
+        "sales_by_month.png" -> Charts.barChartVertical(month, "VENDAS TOTAIS POR MES"),
+        "sales_by_category.png" ->
+          Charts.barChartHorizontal(top10(byCat, "category_name"), "TOP 10 CATEGORIAS POR VENDAS"),
+        "sales_by_state.png" ->
+          Charts.barChartHorizontal(top10(byState, "state"), "TOP 10 ESTADOS POR VENDAS"),
+        "review_distribution.png" -> Charts.barChartVertical(score, "DISTRIBUICAO DE AVALIACOES"))
+      expected.foreach { case (name, png) =>
+        assert(java.util.Arrays.equals(readPng(dir, name), png), s"$name differs")
+      }
+    } finally graft.Tables.deleteTree(dir)
+  }
+
+  test("a category with no English name (null key) is left out of the top-10 chart") {
+    import spark.implicits._
+    val cats = Seq(("toys", Option(50.0)), (null, Option(900.0)), ("books", Option(70.0)))
+    val byCat = cats.toDF("category_name", "total_sales")
+    val stub = Seq(("SP", 1.0)).toDF("state", "total_sales")
+    val dir = java.nio.file.Files.createTempDirectory("charts_null_key").toFile
+    try {
+      Charts.writeDashboard(Map(
+        "agg_sales_by_date" -> Seq((2021, 1, 1, 5.0)).toDF("year", "month", "quarter", "total_sales"),
+        "agg_sales_by_category" -> byCat,
+        "agg_sales_by_location" -> stub,
+        "agg_review_metrics" -> Seq((5L, 1L)).toDF("review_score", "order_count")), dir.toString)
+      assert(java.util.Arrays.equals(readPng(dir, "sales_by_category.png"),
+        Charts.barChartHorizontal(Seq(("books", 70.0), ("toys", 50.0)),
+          "TOP 10 CATEGORIAS POR VENDAS")))
+    } finally graft.Tables.deleteTree(dir)
+  }
 }
