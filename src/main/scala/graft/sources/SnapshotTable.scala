@@ -14,8 +14,9 @@ import org.apache.spark.sql.types.StructType
   *  - data files are IMMUTABLE and uniquely named; a mutation only ever
   *    ADDS files, never rewrites or deletes one in place;
   *  - `_manifests/v{N}.manifest` lists every data file of snapshot N
-  *    (one relative path per line); the manifest is staged to a temp
-  *    name and atomically PUBLISHED into place ([[publishIfAbsent]]:
+  *    (the line format, full and delta, is [[Manifest]]'s alone); the
+  *    manifest is staged to a temp name and atomically PUBLISHED into
+  *    place ([[publishIfAbsent]]:
   *    rename-without-overwrite on HDFS, link(2) on local filesystems —
   *    POSIX rename(2) would silently REPLACE an existing destination,
   *    so plain rename is not a CAS there);
@@ -33,9 +34,9 @@ import org.apache.spark.sql.types.StructType
   *    the state once per attempt, publishes the attempt's lists at
   *    `version + 1`, drops the attempt's stage on a lost race, and owns
   *    the staged-file cleanup and the exhaustion error;
-  *  - row-level deletes can commit as DELETION VECTORS ('~'-prefixed
-  *    manifest lines naming parquet sidecars of (file, row-index)
-  *    addresses under `_dv/`) — see [[deleteWhereDV]]: the data-file
+  *  - row-level deletes can commit as DELETION VECTORS (manifest
+  *    entries naming parquet sidecars of (file, row-index) addresses
+  *    under `_dv/`) — see [[deleteWhereDV]]: the data-file
   *    list is untouched, readers anti-join the addresses out, and
   *    [[compact]] folds accumulated DVs back into data files.
   *
@@ -233,15 +234,12 @@ object SnapshotTable {
     * read hands Spark an EXPLICIT file list the manifest already names,
     * so statting it driver-side is microseconds on any FS, while
     * Spark's default threshold (32 paths) launches a listing job. This
-    * is how manifest-backed readers (Delta) list at any cluster size;
-    * `SPARK_GRAFT_LIST_THRESHOLD` keeps the distributed listing
-    * available for object-store deployments that want the stat burst
-    * fanned out. Only the Spark-default value is ever overridden — an
-    * explicit user/session setting wins. */
+    * is how manifest-backed readers (Delta) list at any cluster size.
+    * Only the Spark-default value is ever overridden — an explicit
+    * user/session setting wins. */
   private def ensureDriverListing(spark: SparkSession): Unit = {
     val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    if (spark.conf.get(key, "32") == "32")
-      spark.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_LIST_THRESHOLD", "10000"))
+    if (spark.conf.get(key, "32") == "32") spark.conf.set(key, "10000")
   }
 
   private def fsFor(spark: SparkSession, dir: String): (FileSystem, Path) = {
@@ -259,15 +257,15 @@ object SnapshotTable {
 
   /** Published manifests are immutable (the CAS primitive refuses an
     * existing destination; the one retract path removes its cache entry
-    * below), so their parsed lines are memoized per path — every verb
+    * below), so their decoded form is memoized per path — every verb
     * calls latestState several times and re-reading + re-parsing the
     * full text each time was measurable driver-gap across the
     * commit-ladder gates (r16). `manifestReadCount` still counts every
     * LOGICAL resolution (cache hits included): the O(1)-commits-
     * vs-history pins (q293, StreamingReplaySpec) measure how many
     * manifests a verb must consult, which memoization does not change. */
-  private val manifestLinesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
+  private val manifestCache =
+    new java.util.concurrent.ConcurrentHashMap[String, Manifest.Decoded]()
 
   /** Size cap shared by every metadata memo map here (ADVICE r16: the
     * r16 caches grew for the JVM lifetime — at the 10^5–10^6-file scale
@@ -303,8 +301,8 @@ object SnapshotTable {
     * ("/tmp/t/_manifests/v1.manifest", the writeManifest side) and via
     * fs.listStatus results ("file:/tmp/...", the latestState side) —
     * unqualified keys split the cache and let a REUSED path (a bench
-    * pass tearing down and rebuilding the same gate dir) serve stale
-    * lines. */
+    * pass tearing down and rebuilding the same gate dir) serve a stale
+    * manifest. */
   private def manifestCacheKey(fs: FileSystem, path: Path): String =
     fs.makeQualified(path).toString
 
@@ -324,29 +322,27 @@ object SnapshotTable {
           .map(_.sparkContext.hadoopConfiguration)
           .getOrElse(new org.apache.hadoop.conf.Configuration())), p)
       catch { case scala.util.control.NonFatal(_) => path }
-    manifestLinesCache.remove(key)
+    manifestCache.remove(key)
     stateCache.clear()
   }
 
-  private def readManifest(fs: FileSystem, path: Path): Seq[String] = {
+  private def readManifest(fs: FileSystem, path: Path): Manifest.Decoded = {
     manifestReadCount.incrementAndGet()
-    // only VERSION manifests are immutable-once-published; branch
-    // manifests are staged, swept and may be recreated — never cached
-    if (manifestVersion(path).isEmpty) {
+    def load(): Manifest.Decoded = {
       val in = fs.open(path)
-      try return scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+      try Manifest.decode(new String(in.readAllBytes(), "UTF-8"))
       finally in.close()
     }
+    // only VERSION manifests are immutable-once-published; branch
+    // manifests are staged, swept and may be recreated — never cached
+    if (manifestVersion(path).isEmpty) return load()
     val key = manifestCacheKey(fs, path)
-    val cached = manifestLinesCache.get(key)
+    val cached = manifestCache.get(key)
     if (cached != null) return cached
-    val in = fs.open(path)
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    manifestLinesCache.put(key, lines)
-    bounded(manifestLinesCache)
-    lines
+    val m = load()
+    manifestCache.put(key, m)
+    bounded(manifestCache)
+    m
   }
 
   // ---- manifest parquet checkpoints + delta manifests (r17) ----------
@@ -359,12 +355,12 @@ object SnapshotTable {
   // shape, reduced to this substrate): a commit whose file/DV/stats
   // lists are reachable from the previous version's state as
   // (carry.filterNot(removed) ++ appended) — every verb here builds its
-  // lists exactly that way — publishes only `-`/`+` lines plus a
-  // `#base=<v-1>` header; any other shape (restore's reorders, a
+  // lists exactly that way — publishes only the changes against v-1
+  // ([[Manifest.Delta]]); any other shape (restore's reorders, a
   // prev-state that is unreachable) falls back to a FULL manifest, so
   // correctness never depends on the delta encoding. Every
   // checkpointInterval commits the writer also publishes
-  // `ckpt.v{N}.parquet` — the full state, one line per row, written
+  // `ckpt.v{N}.parquet` — the full state, one entry per row, written
   // DRIVER-side through parquet-hadoop (metadata-sized, no Spark job)
   // and CAS-published like a manifest. Reading state at v replays at
   // most the delta tail since the nearest memoized state / checkpoint /
@@ -373,11 +369,9 @@ object SnapshotTable {
   // checkpoint at its kept floor BEFORE deleting dropped manifests, so
   // reconstruction never needs reclaimed history.
 
-  private val BaseKey = "base"
-
   /** Full reconstructed snapshot state at one version: data files, DV
-    * sidecars, stats lines (normalized to the current field order) and
-    * the version's own header map (`base` stripped) — everything a
+    * sidecars, stats entries (normalized to the current field order) and
+    * the version's own header map — everything a
     * content-bearing commit must derive from. Immutable once the version
     * is published — memoized per qualified manifest path (the retract
     * and surgery paths invalidate). `carried` is the subset of headers
@@ -389,6 +383,7 @@ object SnapshotTable {
       dvs: Seq[String], stats: Seq[String], meta: Map[String, String]) {
     def carried: Map[String, String] =
       meta.filter { case (k, _) => isCarriedHeader(k) }
+    def lists: Manifest.Lists = Manifest.Lists(files, dvs, stats)
   }
 
   /** The state [[commitLoop]] hands a create-capable verb on a table
@@ -403,7 +398,7 @@ object SnapshotTable {
     * specs can pin the COLD costs (reconstruction walk length, footer
     * re-reads) instead of measuring their own cache warmth. */
   private[graft] def clearMetadataCaches(): Unit = {
-    manifestLinesCache.clear(); stateCache.clear(); fileSchemaCache.clear()
+    manifestCache.clear(); stateCache.clear(); fileSchemaCache.clear()
   }
 
   private def manifestPathOf(mdir: Path, v: Long): Path =
@@ -431,12 +426,12 @@ object SnapshotTable {
     .parseMessageType("message graft_ckpt { required binary line (UTF8); }")
 
   /** Publish the parquet checkpoint sidecar for version `v` if absent:
-    * the full data/DV/stats line list in manifest order, one row per
-    * line, written DRIVER-side (metadata-sized — no Spark job) and
+    * the full data/DV/stats entries in manifest order, one row each,
+    * written DRIVER-side (metadata-sized — no Spark job) and
     * published through the same CAS primitive as manifests. Content is
     * a pure function of the version, so racing writers are harmless. */
   private def writeCkpt(fs: FileSystem, mdir: Path, v: Long,
-      files: Seq[String], dvs: Seq[String], stats: Seq[String]): Unit = {
+      lists: Manifest.Lists): Unit = {
     val dest = ckptPath(mdir, v)
     if (fs.exists(dest)) return
     val tmp = new Path(mdir,
@@ -450,64 +445,25 @@ object SnapshotTable {
         org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
       .build()
     val gf = new org.apache.parquet.example.data.simple.SimpleGroupFactory(CkptSchema)
-    try (files.iterator ++ dvs.iterator.map("~" + _) ++
-        stats.iterator.map("%" + _)).foreach { l =>
+    try Manifest.entries(lists).foreach { l =>
       writer.write(gf.newGroup().append("line", l))
     } finally writer.close()
     if (!publishIfAbsent(fs, tmp, dest)) fs.delete(tmp, false): Unit
   }
 
-  /** The checkpointed (files, dvs, stats) at `v`, or None. Driver-side
-    * single-file parquet read — no Spark job. */
+  /** The checkpointed lists at `v`, or None. Driver-side single-file
+    * parquet read — no Spark job. */
   private def readCkpt(fs: FileSystem, mdir: Path,
-      v: Long): Option[(Seq[String], Seq[String], Seq[String])] = {
+      v: Long): Option[Manifest.Lists] = {
     val p = ckptPath(mdir, v)
     if (!fs.exists(p)) return None
     val reader = org.apache.parquet.hadoop.ParquetReader
       .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), p)
       .withConf(fs.getConf).build()
-    val files = Seq.newBuilder[String]
-    val dvs = Seq.newBuilder[String]
-    val stats = Seq.newBuilder[String]
-    try {
-      var g = reader.read()
-      while (g != null) {
-        val l = g.getString("line", 0)
-        if (l.startsWith("~")) dvs += l.substring(1)
-        else if (l.startsWith("%")) stats += l.substring(1)
-        else files += l
-        g = reader.read()
-      }
-    } finally reader.close()
-    Some((files.result(), dvs.result(), stats.result()))
-  }
-
-  /** Apply one delta manifest's `-`/`+` lines to the base version's
-    * full lists. Additions preserve their manifest order and append
-    * after the carried lines; removals are by set — exactly the
-    * (carry.filterNot ++ appended) shape every commit verb builds,
-    * VERIFIED at write time ([[writeManifest]] publishes a full
-    * manifest whenever a commit's lists are not reachable this way). */
-  private def applyDelta(base: (Seq[String], Seq[String], Seq[String]),
-      raw: Seq[String]): (Seq[String], Seq[String], Seq[String]) = {
-    val remData = Set.newBuilder[String]; val addData = Seq.newBuilder[String]
-    val remDv = Set.newBuilder[String]; val addDv = Seq.newBuilder[String]
-    val remStat = Set.newBuilder[String]; val addStat = Seq.newBuilder[String]
-    raw.foreach { l =>
-      if (l.nonEmpty && (l.charAt(0) == '+' || l.charAt(0) == '-')) {
-        val add = l.charAt(0) == '+'
-        val p = l.substring(1)
-        if (p.startsWith("~")) {
-          if (add) addDv += p.substring(1) else remDv += p.substring(1)
-        } else if (p.startsWith("%")) {
-          if (add) addStat += p.substring(1) else remStat += p.substring(1)
-        } else if (add) addData += p else remData += p
-      }
-    }
-    val (rd, rv, rs) = (remData.result(), remDv.result(), remStat.result())
-    (base._1.filterNot(rd.contains) ++ addData.result(),
-      base._2.filterNot(rv.contains) ++ addDv.result(),
-      base._3.filterNot(rs.contains) ++ addStat.result())
+    try Some(Manifest.fromEntries(
+      Iterator.continually(reader.read()).takeWhile(_ != null)
+        .map(_.getString("line", 0)).toSeq))
+    finally reader.close()
   }
 
   /** Full state of snapshot `v`: memoized, else reconstructed from the
@@ -526,40 +482,38 @@ object SnapshotTable {
     var retries = 0
     while (true) {
       try {
-        val rawV = readManifest(fs, manifestPathOf(mdir, v))
-        val metaV = metaOf(rawV)
-        val lists: (Seq[String], Seq[String], Seq[String]) =
-          if (!metaV.contains(BaseKey))
-            (dataLines(rawV), dvLines(rawV), normalizedStats(rawV))
-          else {
+        val mv = readManifest(fs, manifestPathOf(mdir, v))
+        val lists = mv.body match {
+          case Manifest.Full(l) => l
+          case _: Manifest.Delta =>
             // walk down to a reconstruction base, collecting the delta
             // chain (ascending after the prepends)
-            var chain = List((v, rawV))
-            var base: (Seq[String], Seq[String], Seq[String]) = null
+            var chain = List((v, mv))
+            var base: Manifest.Lists = null
             var w = v - 1
             while (base == null) {
               val cached = stateCache.get(key(w))
-              if (cached != null) base = (cached.files, cached.dvs, cached.stats)
+              if (cached != null) base = cached.lists
               else readCkpt(fs, mdir, w) match {
-                case Some(t) => base = t
+                case Some(l) => base = l
                 case None =>
-                  val raw = readManifest(fs, manifestPathOf(mdir, w))
-                  val meta = metaOf(raw)
-                  if (!meta.contains(BaseKey))
-                    base = (dataLines(raw), dvLines(raw), normalizedStats(raw))
-                  else { chain ::= ((w, raw)); w -= 1 }
+                  val m = readManifest(fs, manifestPathOf(mdir, w))
+                  m.body match {
+                    case Manifest.Full(l) => base = l
+                    case _: Manifest.Delta => chain ::= ((w, m)); w -= 1
+                  }
               }
             }
             var acc = base
-            chain.foreach { case (w2, raw) =>
-              acc = applyDelta(acc, raw)
+            chain.foreach { case (w2, m) =>
+              acc = m.body.applyTo(acc)
               if (w2 < v) // memoize the chain's intermediate states too
                 stateCache.put(key(w2),
-                  TableState(w2, acc._1, acc._2, acc._3, metaOf(raw) - BaseKey))
+                  TableState(w2, acc.files, acc.dvs, acc.stats, m.meta))
             }
             acc
-          }
-        val st = TableState(v, lists._1, lists._2, lists._3, metaV - BaseKey)
+        }
+        val st = TableState(v, lists.files, lists.dvs, lists.stats, mv.meta)
         stateCache.put(key(v), st)
         bounded(stateCache)
         return st
@@ -588,134 +542,11 @@ object SnapshotTable {
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       .unescapePathName(partDir.split('=').last)
 
-  /** `#k=v` header lines of a manifest as a map. */
-  private def metaOf(lines: Seq[String]): Map[String, String] =
-    lines.filter(_.startsWith("#")).flatMap { l =>
-      l.stripPrefix("#").split("=", 2) match {
-        case Array(k, value) => Some(k -> value)
-        case _ => None
-      }
-    }.toMap
-
-  /** Data-file lines of a manifest (metadata lines start with '#',
-    * deletion-vector lines with '~', file-stats lines with '%'). */
-  private def dataLines(lines: Seq[String]): Seq[String] =
-    lines.filter(l => l.nonEmpty && !l.startsWith("#") &&
-      !l.startsWith("~") && !l.startsWith("%"))
-
-  /** Deletion-vector sidecar lines of a manifest ('~'-prefixed relative
-    * paths under `_dv/`). */
-  private def dvLines(lines: Seq[String]): Seq[String] =
-    lines.filter(_.startsWith("~")).map(_.stripPrefix("~"))
-
-  /** Per-file column-stats lines ('%'-prefixed `col|min|max|file`) —
-    * the data-skipping index. Self-describing (the column name rides in
-    * the line), so stats survive commits without separate header
-    * plumbing and several columns can be indexed side by side. The file
-    * path is the LAST field and the parse is limit-4, so a partition
-    * VALUE containing the '|' delimiter cannot corrupt the line
-    * (ADVICE r13 — the column name itself is validated '|'-free at
-    * write time by [[writeClustered]]). */
-  private def statLines(lines: Seq[String]): Seq[String] =
-    lines.filter(_.startsWith("%")).map(_.stripPrefix("%"))
-
-  /** On-disk manifest format this revision writes (`#format=2` header).
-    * Format 1 (headerless) ordered stats lines `col|file|min|max` and
-    * wrote DV addresses with URI-ESCAPED partition values; format 2
-    * reordered stats to `col|min|max|file` (so a '|' in a partition
-    * value cannot corrupt the parse) and stores DV addresses
-    * URI-decoded. A version marker makes the change explicit instead of
-    * silent (ADVICE r14): format-1 stats fall back to the old field
-    * order exactly (the header's absence IS the discriminator), and a
-    * format-1 manifest carrying DV lines is REFUSED loudly — its
-    * escaped addresses would silently stop matching the decoded scan
-    * addresses in escaped partitions, resurrecting deleted rows. */
-  private val FormatKey = "format"
-  private val CurrentFormat = 2
-
-  private def formatOf(meta: Map[String, String]): Int =
-    meta.get(FormatKey).flatMap(_.toIntOption).getOrElse(1)
-
-  /** Stats lines of `lines`, normalized to the CURRENT field order —
-    * format-1 manifests wrote `col|file|min|max`. */
-  private def normalizedStats(lines: Seq[String]): Seq[String] = {
-    val raw = statLines(lines)
-    if (formatOf(metaOf(lines)) >= 2) raw
-    else raw.map { s =>
-      val Array(c, f, mn, mx) = s.split("\\|", 4)
-      s"$c|$mn|$mx|$f"
-    }
-  }
-
-  /** Fail loudly on a format-1 manifest with deletion vectors — their
-    * URI-escaped addresses no longer match the decoded scan addresses,
-    * which would silently resurrect deleted rows in escaped partitions
-    * (ADVICE r14). Called on every path that resolves a manifest into
-    * a read or a diff. */
-  private def guardDvFormat(dir: String, lines: Seq[String]): Unit =
-    guardDvFormatMeta(dir, dvLines(lines), metaOf(lines))
-
-  private def guardDvFormatMeta(dir: String, dvs: Seq[String],
-      meta: Map[String, String]): Unit =
-    if (dvs.nonEmpty && formatOf(meta) < 2)
-      throw new IllegalStateException(
-        s"$dir: a pre-format-2 manifest carries deletion vectors whose " +
-          "row addresses were written URI-escaped; this revision reads " +
-          "addresses decoded, so the DVs would silently stop applying " +
-          "in escaped partitions. Rewrite the table (read the snapshot " +
-          "with the revision that wrote it, write() it fresh) before " +
-          "reading it here.")
-
-  /** Parse one stats line into (column, file, rawMin, rawMax). Raw
-    * values are either decimal longs (numeric stats) or `s:`-prefixed
-    * URL-encoded strings (string stats, [[mkStatStr]]) — the two
-    * classes share the '%' line format, so every commit path carries
-    * both without knowing which is which. Callers must hand lines
-    * already normalized to the current field order ([[normalizedStats]]
-    * — TableState.stats always is). */
-  private def parseStatRaw(line: String): (String, String, String, String) = {
-    val Array(c, mn, mx, f) = line.split("\\|", 4)
-    (c, f, mn, mx)
-  }
-
-  /** Numeric view of a stats line; None for string-stats lines (a
-    * numeric consumer treats files with only string stats as stat-less
-    * — conservatively scanned). */
-  private def parseStatNum(line: String): Option[(String, String, Long, Long)] = {
-    val (c, f, mn, mx) = parseStatRaw(line)
-    for (a <- mn.toLongOption; b <- mx.toLongOption) yield (c, f, a, b)
-  }
-
-  /** String view of a stats line; None for numeric lines. */
-  private def parseStatStr(line: String): Option[(String, String, String, String)] = {
-    val (c, f, mn, mx) = parseStatRaw(line)
-    for (a <- decStatStr(mn); b <- decStatStr(mx)) yield (c, f, a, b)
-  }
-
-  private def mkStat(col: String, file: String, mn: Long, mx: Long): String =
-    s"$col|$mn|$mx|$file"
-
-  /** String-stats value coding: `s:` marker + URL-encoding keeps the
-    * '|' line delimiter, newlines, and any other byte out of the
-    * manifest line, and the marker keeps a numeric-LOOKING string
-    * ("123") from ever being misread as a numeric stat. */
-  private val StrStatMark = "s:"
-  private def encStatStr(v: String): String =
-    StrStatMark + java.net.URLEncoder.encode(v, "UTF-8")
-  private def decStatStr(v: String): Option[String] =
-    if (v.startsWith(StrStatMark))
-      Some(java.net.URLDecoder.decode(v.stripPrefix(StrStatMark), "UTF-8"))
-    else None
-
-  private def mkStatStr(col: String, file: String, mn: String,
-      mx: String): String =
-    s"$col|${encStatStr(mn)}|${encStatStr(mx)}|$file"
-
-  /** Stats lines still valid after a commit keeps only `kept` data
+  /** Stats entries still valid after a commit keeps only `kept` data
     * files (stats address immutable files, so validity IS presence). */
   private def carriedStats(stats: Seq[String], kept: Seq[String]): Seq[String] = {
     val keptSet = kept.toSet
-    stats.filter(s => keptSet.contains(parseStatRaw(s)._2))
+    stats.filter(s => keptSet.contains(Manifest.statKey(s)._2))
   }
 
   /** Latest committed (version, data-file relative paths); None if the
@@ -733,61 +564,61 @@ object SnapshotTable {
   private def latestState(spark: SparkSession,
       dir: String): Option[TableState] = {
     val (fs, root) = fsFor(spark, dir)
-    val mdir = new Path(root, ManifestDir)
-    if (!fs.exists(mdir)) return None
-    val versions = fs.listStatus(mdir).toSeq
-      .flatMap(f => manifestVersion(f.getPath))
-    if (versions.isEmpty) None
-    else {
-      val st = stateAt(fs, root, dir, versions.max)
-      guardDvFormatMeta(dir, st.dvs, st.meta)
-      Some(st)
-    }
+    versionsIn(fs, new Path(root, ManifestDir)).headOption
+      .map { case (v, _) => committedAt(fs, root, dir, v) }
   }
+
+  /** The published versions in `mdir` and their manifest files, newest
+    * first; empty when nothing was committed. */
+  private def versionsIn(fs: FileSystem,
+      mdir: Path): Seq[(Long, org.apache.hadoop.fs.FileStatus)] =
+    if (!fs.exists(mdir)) Seq.empty
+    else fs.listStatus(mdir).toSeq
+      .flatMap(f => manifestVersion(f.getPath).map(_ -> f)).sortBy(-_._1)
 
   /** [[latestState]] of a table that must already exist. */
   private def committedState(spark: SparkSession, dir: String): TableState =
     latestState(spark, dir)
       .getOrElse(sys.error(s"$dir has no committed snapshot"))
 
-  /** EFFECTIVE full lines of version `v`'s manifest (headers + the
-    * complete data/DV/stats lists — delta manifests are reconstructed
-    * through [[stateAt]], full manifests return their raw lines
-    * untouched, preserving format-1 parse semantics); fails loudly when
-    * the manifest was vacuumed away (history that no longer exists
-    * cannot be read or diffed). */
-  private def manifestLinesAt(fs: FileSystem, root: Path, dir: String,
-      v: Long): Seq[String] = {
-    val p = new Path(new Path(root, ManifestDir), s"v$v.manifest")
-    require(fs.exists(p), s"$dir has no snapshot v$v")
-    val raw = readManifest(fs, p)
-    if (!metaOf(raw).contains(BaseKey)) raw
-    else {
-      val st = stateAt(fs, root, dir, v)
-      st.meta.toSeq.sorted.map { case (k, value) => s"#$k=$value" } ++
-        st.files ++ st.dvs.map("~" + _) ++ st.stats.map("%" + _)
-    }
+  /** The committed state of version `v` — the one reader of a version:
+    * the latest snapshot, time travel, diffs and restore all resolve
+    * through it. Fails loudly when the manifest was vacuumed away
+    * (history that no longer exists cannot be read or diffed; a
+    * mid-walk vacuum is retried inside [[stateAt]]) and refuses a
+    * format-1 snapshot carrying deletion vectors. */
+  private def committedAt(fs: FileSystem, root: Path, dir: String,
+      v: Long): TableState = {
+    require(fs.exists(manifestPathOf(new Path(root, ManifestDir), v)),
+      s"$dir has no snapshot v$v")
+    val st = stateAt(fs, root, dir, v)
+    Manifest.requireReadable(dir, st.meta, st.dvs)
+    st
   }
+
+  /** The committed state of `version`, or of the latest snapshot. */
+  private def stateFor(spark: SparkSession, dir: String,
+      version: Option[Long]): TableState =
+    version.fold(committedState(spark, dir)) { v =>
+      val (fs, root) = fsFor(spark, dir)
+      committedAt(fs, root, dir, v)
+    }
 
   /** Per-file min/max stats of `statsCol` in the latest snapshot, as
     * (file → (min, max)) — the inspection surface for the data-skipping
     * index [[writeClustered]] builds and [[readRange]] prunes with. */
   def fileStats(spark: SparkSession, dir: String,
       statsCol: String): Map[String, (Long, Long)] =
-    latestState(spark, dir).map(_.stats).getOrElse(Seq.empty)
-      .flatMap(parseStatNum).collect {
-        case (c, f, mn, mx) if c == statsCol => f -> (mn, mx)
-      }.toMap
+    Manifest.statRanges(latestState(spark, dir).map(_.stats)
+      .getOrElse(Seq.empty), statsCol)(Manifest.longValue)
 
   /** Per-file lexicographic min/max STRING stats of `statsCol` in the
     * latest snapshot — [[fileStats]]' sibling for string columns
     * ([[readRangeString]] prunes with these). */
   def fileStatsStr(spark: SparkSession, dir: String,
       statsCol: String): Map[String, (String, String)] =
-    latestState(spark, dir).map(_.stats).getOrElse(Seq.empty)
-      .flatMap(parseStatStr).collect {
-        case (c, f, mn, mx) if c == statsCol => f -> (mn, mx)
-      }.toMap
+    Manifest.statRanges(latestState(spark, dir).map(_.stats)
+      .getOrElse(Seq.empty), statsCol)(Manifest.stringValue)
 
   /** Read snapshot `version` (default: latest). The returned frame is
     * bound to that snapshot's exact file list — concurrent commits and
@@ -833,18 +664,10 @@ object SnapshotTable {
       version: Option[Long], withLineage: Boolean,
       restrictTo: Option[Set[String]] = None): DataFrame = {
     val (fs, root) = fsFor(spark, dir)
-    val (allFiles, dvs) = version match {
-      case None =>
-        val st = committedState(spark, dir)
-        (st.files, st.dvs)
-      case Some(v) =>
-        val lines = manifestLinesAt(fs, root, dir, v)
-        guardDvFormat(dir, lines)
-        (dataLines(lines), dvLines(lines))
-    }
+    val st = stateFor(spark, dir, version)
     val files = restrictTo match {
-      case Some(keep) => allFiles.filter(keep)
-      case None => allFiles
+      case Some(keep) => st.files.filter(keep)
+      case None => st.files
     }
     require(files.nonEmpty, s"$dir snapshot is empty")
     // basePath keeps the hive partition column visible on per-file reads;
@@ -857,15 +680,15 @@ object SnapshotTable {
     // footer-merge job; partition-column typing still comes from
     // Spark's own dir-value inference, exactly as the mergeSchema path.
     val plain = readFiles(spark, dir, fs, root, files)
-    if (dvs.isEmpty && !withLineage) return plain
+    if (st.dvs.isEmpty && !withLineage) return plain
     val addressed = plain
       .withColumn(FileCol, relPathExpr)
       .withColumn(PosCol, col("_metadata.row_index"))
     val applied =
-      if (dvs.isEmpty) addressed
+      if (st.dvs.isEmpty) addressed
       else {
-        val dvPaths = dvs.map(f => new Path(root, f).toString)
-        val dvDf = mergedDataSchema(fs, root, dvs) match {
+        val dvPaths = st.dvs.map(f => new Path(root, f).toString)
+        val dvDf = mergedDataSchema(fs, root, st.dvs) match {
           case Some(sc) => spark.read.schema(sc).parquet(dvPaths: _*)
           case None => spark.read.parquet(dvPaths: _*)
         }
@@ -881,19 +704,12 @@ object SnapshotTable {
     * timestamps were stamped fall back to the manifest file's mtime. */
   def history(spark: SparkSession, dir: String): Seq[(Long, Long, Map[String, String])] = {
     val (fs, root) = fsFor(spark, dir)
-    val mdir = new Path(root, ManifestDir)
-    if (!fs.exists(mdir)) return Seq.empty
-    fs.listStatus(mdir).toSeq
-      .flatMap(f => manifestVersion(f.getPath).map(v => (v, f)))
-      .sortBy(-_._1)
-      .map { case (v, f) =>
-        // BaseKey is delta-encoding plumbing, not commit metadata —
-        // history's meta maps stay shaped as before delta manifests
-        val meta = metaOf(readManifest(fs, f.getPath)) - BaseKey
-        val ts = meta.get("ts").flatMap(_.toLongOption)
-          .getOrElse(f.getModificationTime)
-        (v, ts, meta)
-      }
+    versionsIn(fs, new Path(root, ManifestDir)).map { case (v, f) =>
+      val meta = readManifest(fs, f.getPath).meta
+      val ts = meta.get("ts").flatMap(_.toLongOption)
+        .getOrElse(f.getModificationTime)
+      (v, ts, meta)
+    }
   }
 
   /** Timestamp time travel (the `TIMESTAMP AS OF` surface): read the
@@ -901,11 +717,16 @@ object SnapshotTable {
     * stamps live inside the atomically-renamed manifest, so the mapping
     * from timestamp to snapshot is as crash-consistent as the commits
     * themselves. */
-  def readAsOf(spark: SparkSession, dir: String, tsMillis: Long): DataFrame = {
+  def readAsOf(spark: SparkSession, dir: String, tsMillis: Long): DataFrame =
+    read(spark, dir, Some(versionAsOf(spark, dir, tsMillis)))
+
+  /** The highest version committed at or before `tsMillis`. */
+  private def versionAsOf(spark: SparkSession, dir: String,
+      tsMillis: Long): Long = {
     val eligible = history(spark, dir).filter(_._2 <= tsMillis)
     require(eligible.nonEmpty,
       s"$dir has no snapshot committed at or before $tsMillis")
-    read(spark, dir, Some(eligible.maxBy(_._1)._1))
+    eligible.maxBy(_._1)._1
   }
 
   /** Incremental append reader (change-feed-lite for append-only
@@ -932,8 +753,8 @@ object SnapshotTable {
   def readAppendsSinceVersioned(spark: SparkSession, dir: String,
       sinceVersion: Long): Option[(Long, DataFrame)] = {
     val (fs, root) = fsFor(spark, dir)
-    val sinceLines = manifestLinesAt(fs, root, dir, sinceVersion)
-    val before = dataLines(sinceLines).toSet
+    val since = committedAt(fs, root, dir, sinceVersion)
+    val before = since.files.toSet
     val st = committedState(spark, dir)
     val (nowV, now, nowDvs) = (st.version, st.files, st.dvs)
     // a REWRITE (deleteWhere/merge/compact) removes files from the
@@ -954,7 +775,7 @@ object SnapshotTable {
     // data file), so an incremental maintainer fed only "fresh files"
     // would silently keep rows a DV deleted — fail loudly instead of
     // going stale
-    if (dvLines(sinceLines).toSet != nowDvs.toSet)
+    if (since.dvs.toSet != nowDvs.toSet)
       throw new IllegalStateException(
         s"$dir: the deletion-vector set changed between v$sinceVersion " +
           s"and v$nowV — append-diff reading cannot represent row " +
@@ -1067,7 +888,7 @@ object SnapshotTable {
       // complete in every manifest, delta or full; no reconstruction)
       val p = manifestPathOf(new Path(root, ManifestDir), v)
       require(fs.exists(p), s"$dir has no snapshot v$v")
-      val reorg = metaOf(readManifest(fs, p))
+      val reorg = readManifest(fs, p).meta
         .get(DataChangeKey).contains("false")
       if (reorg) {
         if (prev > runStart) segs += ((runStart, prev))
@@ -1088,13 +909,9 @@ object SnapshotTable {
     import spark.implicits._
     val (fs, root) = fsFor(spark, dir)
     val sinceVersion = fromVersion
-    val sinceLines = manifestLinesAt(fs, root, dir, fromVersion)
-    val toLines = manifestLinesAt(fs, root, dir, toVersion)
-    guardDvFormat(dir, sinceLines)
-    guardDvFormat(dir, toLines)
-    val toFiles = dataLines(toLines)
-    val toDvs = dvLines(toLines)
-    val before = dataLines(sinceLines)
+    val since = committedAt(fs, root, dir, fromVersion)
+    val to = committedAt(fs, root, dir, toVersion)
+    val (before, toFiles, toDvs) = (since.files, to.files, to.dvs)
     val beforeSet = before.toSet
     val nowSet = toFiles.toSet
     val removed = before.filterNot(nowSet.contains)
@@ -1105,7 +922,7 @@ object SnapshotTable {
         Seq.empty[(String, Long)].toDF(FileCol, PosCol)
       else spark.read.parquet(rels.map(f => new Path(root, f).toString): _*)
         .select(col("file").as(FileCol), col("pos").as(PosCol))
-    val sinceDvRels = dvLines(sinceLines)
+    val sinceDvRels = since.dvs
     val sdv = dvAddrs(sinceDvRels)
     val ndv = dvAddrs(toDvs)
     // un-deletes: a DV row present at `since` over a CARRIED file but
@@ -1212,8 +1029,8 @@ object SnapshotTable {
       s"tableChanges needs fromVersion < toVersion ($fromVersion, $toVersion)")
     val (fs, root) = fsFor(spark, dir)
     val steps = (fromVersion until toVersion).flatMap { v =>
-      val toLines = manifestLinesAt(fs, root, dir, v + 1)
-      if (metaOf(toLines).get(DataChangeKey).contains("false")) None
+      if (committedAt(fs, root, dir, v + 1).meta.get(DataChangeKey)
+          .contains("false")) None
       else {
         val (ins, del) = changesBetween(spark, dir, v, v + 1)
         Some(ins.withColumn(ChangeTypeCol, lit("insert"))
@@ -1349,8 +1166,9 @@ object SnapshotTable {
       else None
     }.maxOption.getOrElse(0L)
 
-  /** Serialize (`#k=v` headers + file list) and atomically publish the
-    * manifest for version `v`; true iff THIS writer won the version.
+  /** Encode ([[Manifest.encode]], which refuses a header the format
+    * cannot carry) and atomically publish the manifest for version `v`;
+    * true iff THIS writer won the version.
     * The single serialization path of every commit ([[commitAt]]) —
     * every commit stamps its wall-clock millis INSIDE the manifest (the
     * readAsOf timestamp-travel anchor), atomic with the file list, so
@@ -1367,9 +1185,6 @@ object SnapshotTable {
       files: Seq[String], meta: Map[String, String],
       dvs: Seq[String] = Seq.empty,
       stats: Seq[String] = Seq.empty): Boolean = {
-    fs.mkdirs(mdir)
-    val stamped = meta + ("ts" -> System.currentTimeMillis().toString) +
-      (FormatKey -> CurrentFormat.toString)
     // DELTA body when the new lists are reachable from the previous
     // version's state as (carry.filterNot(removed) ++ appended) — the
     // shape every verb builds; anything else (restore's reorders, an
@@ -1388,35 +1203,19 @@ object SnapshotTable {
           } catch { case scala.util.control.NonFatal(_) => None }
         }
       }
-    def deltaOf(prev: Seq[String],
-        now: Seq[String]): Option[(Seq[String], Seq[String])] = {
-      val prevSet = prev.toSet; val nowSet = now.toSet
-      val removed = prev.filterNot(nowSet.contains)
-      val added = now.filterNot(prevSet.contains)
-      val rs = removed.toSet
-      if ((prev.filterNot(rs.contains) ++ added) == now) Some((removed, added))
-      else None
-    }
-    val deltaBody: Option[Seq[String]] = prevOpt.flatMap { p =>
-      for {
-        fd <- deltaOf(p.files, files)
-        dd <- deltaOf(p.dvs, dvs)
-        sd <- deltaOf(p.stats, stats)
-      } yield fd._1.map("-" + _) ++ fd._2.map("+" + _) ++
-        dd._1.map(x => "-~" + x) ++ dd._2.map(x => "+~" + x) ++
-        sd._1.map(x => "-%" + x) ++ sd._2.map(x => "+%" + x)
-    }
-    val headerMap =
-      deltaBody.fold(stamped)(_ => stamped + (BaseKey -> (v - 1).toString))
-    val header = headerMap.toSeq.sorted.map { case (k, value) => s"#$k=$value" }
-    val body =
-      deltaBody.getOrElse(files ++ dvs.map("~" + _) ++ stats.map("%" + _))
+    val lists = Manifest.Lists(files, dvs, stats)
+    val m = Manifest.current(
+      meta + ("ts" -> System.currentTimeMillis().toString),
+      prevOpt.flatMap(p => Manifest.delta(v - 1, p.lists, lists))
+        .getOrElse(Manifest.Full(lists)))
+    val text = Manifest.encode(m)
+    fs.mkdirs(mdir)
     val tmp = new Path(mdir,
       s".v$v.manifest.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
     val out = fs.create(tmp, true)
-    try out.write(((header ++ body).mkString("\n") + "\n").getBytes("UTF-8"))
+    try out.write(text.getBytes("UTF-8"))
     finally out.close()
-    val dest = new Path(mdir, s"v$v.manifest")
+    val dest = manifestPathOf(mdir, v)
     val destKey = manifestCacheKey(fs, dest)
     if (!publishIfAbsent(fs, tmp, dest)) { fs.delete(tmp, false); false }
     else if (v < lowWatermark(fs, mdir)) {
@@ -1425,16 +1224,16 @@ object SnapshotTable {
       // remove-delete-remove (ADVICE r16): a concurrent reader racing
       // the retract can re-seed the caches between the first remove and
       // the delete, leaving stale entries for a dead path.
-      manifestLinesCache.remove(destKey); stateCache.remove(destKey)
+      manifestCache.remove(destKey); stateCache.remove(destKey)
       fs.delete(dest, false)
-      manifestLinesCache.remove(destKey); stateCache.remove(destKey)
+      manifestCache.remove(destKey); stateCache.remove(destKey)
       false
     } else {
       // this writer's commit will be re-read immediately by its own
       // post-commit bookkeeping — seed both caches from memory
-      manifestLinesCache.put(destKey, header ++ body)
-      stateCache.put(destKey, TableState(v, files, dvs, stats, stamped))
-      bounded(manifestLinesCache); bounded(stateCache)
+      manifestCache.put(destKey, m)
+      stateCache.put(destKey, TableState(v, files, dvs, stats, m.meta))
+      bounded(manifestCache); bounded(stateCache)
       // checkpoint cadence: a file-count-sized write every N commits
       // (amortized ~files/N per commit) keeps every other commit and
       // every reconstruction delta-sized. Never fails the commit — the
@@ -1442,7 +1241,7 @@ object SnapshotTable {
       // full-manifest walk without it.
       val interval = checkpointInterval
       if (interval > 0 && v % interval == 0)
-        try writeCkpt(fs, mdir, v, files, dvs, stats)
+        try writeCkpt(fs, mdir, v, lists)
         catch {
           case scala.util.control.NonFatal(e) => System.err.println(
             s"[graft.SnapshotTable] WARN: checkpoint at v$v failed: " +
@@ -1478,7 +1277,8 @@ object SnapshotTable {
   private final case class Done[T](result: T) extends Attempt[T]
 
   /** CAS-commit these lists at the attempt's `version + 1`; `onLoss`
-    * drops what the attempt itself staged when another writer wins. */
+    * drops what the attempt itself staged when another writer wins or
+    * the headers are refused. */
   private final case class Commit[T](files: Seq[String],
       meta: Map[String, String], dvs: Seq[String], stats: Seq[String],
       result: T, onLoss: () => Unit = () => ()) extends Attempt[T]
@@ -1492,7 +1292,8 @@ object SnapshotTable {
     * `staged` names call-level files reused across attempts (by-name, so
     * a verb that re-stages mid-loop hands over its current set): they
     * are dropped on every exit but a won commit — a [[Done]], an attempt
-    * that throws (a [[ConstraintViolationException]]), or exhaustion. */
+    * that throws (a [[ConstraintViolationException]]), a header the
+    * manifest format refuses, or exhaustion. */
   private def commitLoop[T](spark: SparkSession, dir: String, verb: String,
       staged: => Seq[String] = Nil, allowEmpty: Boolean = false)(
       attempt: TableState => Attempt[T]): T = {
@@ -1510,6 +1311,12 @@ object SnapshotTable {
           dropStaged(spark, dir, staged)
           return r
         case Commit(files, meta, dvs, stats, r, onLoss) =>
+          // refused before anything is published: nothing references
+          // the stage, so drop it on the way out
+          try Manifest.requireHeaders(meta)
+          catch { case e: IllegalArgumentException =>
+            onLoss(); dropStaged(spark, dir, staged); throw e
+          }
           if (commitAt(spark, dir, version, files, meta, dvs, stats)) return r
           onLoss()
       }
@@ -1696,14 +1503,9 @@ object SnapshotTable {
           !s.isAfter(hiT) && e.isAfter(loT) // [s, e) intersects [lo, hi]
       }
     }
-    val residual = col(src).between(
-      lit(lo).cast("timestamp"), lit(hi).cast("timestamp"))
-    val frame =
-      if (live.isEmpty)
-        readHidden(spark, dir, Some(st.version)).filter(lit(false))
-      else readResolved(spark, dir, Some(st.version), withLineage = false,
-        restrictTo = Some(live.toSet)).filter(residual).drop(HiddenPartCol)
-    (frame, live.size, st.files.size)
+    val (frame, kept, total) = prunedRead(spark, dir, st, live,
+      col(src).between(lit(lo).cast("timestamp"), lit(hi).cast("timestamp")))
+    (frame.drop(HiddenPartCol), kept, total)
   }
 
   /** Carried header pointing at a column's bloom point-lookup index
@@ -1848,12 +1650,7 @@ object SnapshotTable {
             expr("bloom_probe(sketch, __probe)"))
           .select("file").collect().map(_.getString(0)).toSeq
     }
-    val residual = col(column) === lit(value)
-    val frame =
-      if (live.isEmpty) read(spark, dir, Some(st.version)).filter(lit(false))
-      else readResolved(spark, dir, Some(st.version), withLineage = false,
-        restrictTo = Some(live.toSet)).filter(residual)
-    (frame, live.size, st.files.size)
+    prunedRead(spark, dir, st, live, col(column) === lit(value))
   }
 
   /** `column`'s stored type, resolved from ONE file's footer (cheap at
@@ -1889,6 +1686,10 @@ object SnapshotTable {
 
   private def branchQueryId(branch: String): String = "wap." + branch
 
+  /** The staged data files a branch manifest lists. */
+  private def branchFiles(fs: FileSystem, bp: Path): Seq[String] =
+    readManifest(fs, bp).body.applyTo(Manifest.NoLists).files
+
   /** Stage `df` as unpublished branch `branch`: files land in the hive
     * layout (invisible to readers — no committed manifest references
     * them), the branch manifest publishes atomically (two stagers of
@@ -1898,10 +1699,10 @@ object SnapshotTable {
     * name that was ever staged-and-still-pending or published. */
   def writeBranch(spark: SparkSession, dir: String, df: DataFrame,
       partCol: String, branch: String): Unit = {
-    require(branch.nonEmpty && !branch.exists(c =>
-        c == '.' || c == '/' || c == '=' || c == '\n'),
-      s"branch name '$branch' must be nonempty without '.', '/', '=' " +
-        "or newlines")
+    require(branch.nonEmpty && !branch.exists(c => c == '.' || c == '/'),
+      s"branch name '$branch' must be nonempty without '.' or '/'")
+    // the name becomes a header key of the publish commit
+    Manifest.requireHeader(LastBatchPrefix + branchQueryId(branch), branch)
     val (fs, root) = fsFor(spark, dir)
     val mdir = new Path(root, ManifestDir)
     val st = latestState(spark, dir)
@@ -1916,8 +1717,8 @@ object SnapshotTable {
     val tmp = new Path(mdir,
       s".branch.$branch.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
     val out = fs.create(tmp, true)
-    try out.write((s"#${FormatKey}=$CurrentFormat\n" +
-      staged.mkString("\n") + "\n").getBytes("UTF-8"))
+    try out.write(Manifest.encode(Manifest.current(Map.empty,
+      Manifest.Full(Manifest.NoLists.copy(files = staged)))).getBytes("UTF-8"))
     finally out.close()
     if (!publishIfAbsent(fs, tmp, branchPath(mdir, branch))) {
       fs.delete(tmp, false)
@@ -1934,7 +1735,7 @@ object SnapshotTable {
     val (fs, root) = fsFor(spark, dir)
     val bp = branchPath(new Path(root, ManifestDir), branch)
     require(fs.exists(bp), s"$dir has no staged branch '$branch'")
-    val staged = dataLines(readManifest(fs, bp))
+    val staged = branchFiles(fs, bp)
     val stagedRows = readFiles(spark, dir, fs, root, staged)
     if (stagedOnly) stagedRows
     else read(spark, dir).unionByName(stagedRows, allowMissingColumns = true)
@@ -1963,7 +1764,7 @@ object SnapshotTable {
     require(fs.exists(bp), s"$dir has no staged branch '$branch'")
     // the staged files belong to the branch manifest, not to this call:
     // a failed publish leaves them for a retry or dropBranch
-    val staged = dataLines(readManifest(fs, bp))
+    val staged = branchFiles(fs, bp)
     val stagedRows = readFiles(spark, dir, fs, root, staged)
     val v = commitLoop(spark, dir, s"publish branch '$branch' to") { st =>
       published(st) match {
@@ -1987,7 +1788,7 @@ object SnapshotTable {
     val (fs, root) = fsFor(spark, dir)
     val bp = branchPath(new Path(root, ManifestDir), branch)
     if (!fs.exists(bp)) return
-    dropStaged(spark, dir, dataLines(readManifest(fs, bp)))
+    dropStaged(spark, dir, branchFiles(fs, bp))
     fs.delete(bp, false): Unit
   }
 
@@ -2045,11 +1846,9 @@ object SnapshotTable {
     * Returns the committed version. */
   def addConstraint(spark: SparkSession, dir: String, name: String,
       predicate: String): Long = {
-    require(name.nonEmpty && !name.exists(c => c == '=' || c == '\n'),
-      s"constraint name '$name' must be nonempty without '=' or newlines")
-    require(!predicate.contains("\n"),
-      "constraint predicates are single manifest lines — no newlines")
+    require(name.nonEmpty, "constraint names must be nonempty")
     val key = ConstraintPrefix + name
+    Manifest.requireHeader(key, predicate)
     commitMeta(spark, dir, "add constraint to") { st =>
       require(!st.meta.contains(key),
         s"$dir already has a constraint named '$name'")
@@ -2104,9 +1903,9 @@ object SnapshotTable {
       cols: Seq[String]): Long = {
     val distinct = cols.distinct
     distinct.foreach { c =>
-      require(!c.contains("|") && !c.contains(","),
-        s"stats column name '$c' cannot contain '|' (the stats-line " +
-          "delimiter) or ',' (the registration-list delimiter)")
+      Manifest.requireStatsColumn(c)
+      require(!c.contains(","), s"stats column name '$c' cannot contain " +
+        "',' (the registration-list delimiter)")
     }
     commitMeta(spark, dir, "register stats columns on") { st =>
       Option.when(statsColsOf(st.meta) != distinct)(
@@ -2201,7 +2000,7 @@ object SnapshotTable {
     * per-file min/max data-skipping index: rows are range-partitioned
     * on the column before staging, so files carry near-disjoint value
     * ranges, and one column-pruned pass over the staged files collects
-    * each file's (min, max) into '%'-prefixed manifest lines — the
+    * each file's (min, max) into manifest stats entries — the
     * public Delta/Iceberg file-stats idea reduced to its minimum, and
     * the third pruning leg next to hive partition dirs and the Z-order
     * bucket IN-list (`Layouts.writeZOrdered`). `statsCol` must be
@@ -2217,8 +2016,7 @@ object SnapshotTable {
     * separate stats store to keep consistent. */
   def writeClustered(spark: SparkSession, dir: String, df: DataFrame,
       partCol: String, statsCol: String, rangeParts: Int = 0): Long = {
-    require(!statsCol.contains("|"),
-      s"stats column name '$statsCol' contains the stats-line delimiter '|'")
+    Manifest.requireStatsColumn(statsCol)
     // rangeParts = 0 (default) derives the slice count from the corpus
     // ([[resolveParts]]' knob rule) — one cheap aggregate against data
     // the write is about to shuffle anyway; callers that already know n
@@ -2242,12 +2040,12 @@ object SnapshotTable {
   /** [[computeStats]] for SEVERAL columns in one column-pruned pass
     * (one scan regardless of column count — the shape
     * [[setStatsColumns]]' per-commit hook needs). TYPE-AWARE: a string
-    * column gets lexicographic min/max string stats ([[mkStatStr]],
-    * pruned by [[readRangeString]]); everything else casts to long
-    * ([[mkStat]], pruned by [[readRange]]) — the repo-wide exact-
-    * arithmetic rule. Columns absent from the scanned files' schema,
-    * or entirely null / non-castable within a file, contribute no
-    * line for that file. */
+    * column gets lexicographic min/max string stats
+    * ([[Manifest.stringStat]], pruned by [[readRangeString]]);
+    * everything else casts to long ([[Manifest.longStat]], pruned by
+    * [[readRange]]) — the repo-wide exact-arithmetic rule. Columns
+    * absent from the scanned files' schema, or entirely null /
+    * non-castable within a file, contribute no line for that file. */
   private def computeStatsMulti(spark: SparkSession, dir: String,
       files: Seq[String], cols: Seq[String]): Seq[String] = {
     if (files.isEmpty || cols.isEmpty) return Seq.empty
@@ -2268,9 +2066,10 @@ object SnapshotTable {
         val f = r.getString(0)
         present.zipWithIndex.collect {
           case (c, i) if !r.isNullAt(1 + 2 * i) =>
-            if (isStr(c))
-              mkStatStr(c, f, r.getString(1 + 2 * i), r.getString(2 + 2 * i))
-            else mkStat(c, f, r.getLong(1 + 2 * i), r.getLong(2 + 2 * i))
+            if (isStr(c)) Manifest.stringStat(c, f, r.getString(1 + 2 * i),
+              r.getString(2 + 2 * i))
+            else Manifest.longStat(c, f, r.getLong(1 + 2 * i),
+              r.getLong(2 + 2 * i))
         }
       }
   }
@@ -2292,21 +2091,27 @@ object SnapshotTable {
   def readRange(spark: SparkSession, dir: String, statsCol: String,
       lo: Long, hi: Long): (DataFrame, Int, Int) = {
     val st = committedState(spark, dir)
-    val (v, files, stats) = (st.version, st.files, st.stats)
-    val ranges = stats.flatMap(parseStatNum)
-      .collect { case (c, f, mn, mx) if c == statsCol => f -> (mn, mx) }
-      .toMap
-    val live = files.filter(f => ranges.get(f) match {
+    val ranges = Manifest.statRanges(st.stats, statsCol)(Manifest.longValue)
+    val live = st.files.filter(f => ranges.get(f) match {
       case Some((mn, mx)) => mx >= lo && mn <= hi
       case None => true // no stats for this file: must scan it
     })
-    val residual = col(statsCol).cast("long").between(lo, hi)
+    prunedRead(spark, dir, st, live,
+      col(statsCol).cast("long").between(lo, hi))
+  }
+
+  /** The tail every pruned reader shares: snapshot `st` read back over
+    * only its `live` files (deletion vectors applied) with the exact
+    * `residual` predicate on top — or, when pruning left no file, the
+    * snapshot's schema-stable empty relation (zero IO) — plus the
+    * (files kept, files total) audit pair. */
+  private def prunedRead(spark: SparkSession, dir: String, st: TableState,
+      live: Seq[String], residual: Column): (DataFrame, Int, Int) = {
     val frame =
-      if (live.isEmpty) // schema-stable empty relation, zero IO
-        read(spark, dir, Some(v)).filter(lit(false))
-      else readResolved(spark, dir, Some(v), withLineage = false,
+      if (live.isEmpty) read(spark, dir, Some(st.version)).filter(lit(false))
+      else readResolved(spark, dir, Some(st.version), withLineage = false,
         restrictTo = Some(live.toSet)).filter(residual)
-    (frame, live.size, files.size)
+    (frame, live.size, st.files.size)
   }
 
   /** Driver-side string comparison in Spark's OWN order (UTF8String —
@@ -2333,20 +2138,12 @@ object SnapshotTable {
   def readRangeString(spark: SparkSession, dir: String, statsCol: String,
       lo: String, hi: String): (DataFrame, Int, Int) = {
     val st = committedState(spark, dir)
-    val ranges = st.stats.flatMap(parseStatStr)
-      .collect { case (c, f, mn, mx) if c == statsCol => f -> (mn, mx) }
-      .toMap
+    val ranges = Manifest.statRanges(st.stats, statsCol)(Manifest.stringValue)
     val live = st.files.filter(f => ranges.get(f) match {
       case Some((mn, mx)) => utf8Cmp(lo, mx) <= 0 && utf8Cmp(mn, hi) <= 0
       case None => true // no stats for this file: must scan it
     })
-    val residual = col(statsCol).between(lit(lo), lit(hi))
-    val frame =
-      if (live.isEmpty)
-        read(spark, dir, Some(st.version)).filter(lit(false))
-      else readResolved(spark, dir, Some(st.version), withLineage = false,
-        restrictTo = Some(live.toSet)).filter(residual)
-    (frame, live.size, st.files.size)
+    prunedRead(spark, dir, st, live, col(statsCol).between(lit(lo), lit(hi)))
   }
 
   /** Prefix read on a STRING column through the string-stats index:
@@ -2362,9 +2159,7 @@ object SnapshotTable {
   def readPrefix(spark: SparkSession, dir: String, statsCol: String,
       prefix: String): (DataFrame, Int, Int) = {
     val st = committedState(spark, dir)
-    val ranges = st.stats.flatMap(parseStatStr)
-      .collect { case (c, f, mn, mx) if c == statsCol => f -> (mn, mx) }
-      .toMap
+    val ranges = Manifest.statRanges(st.stats, statsCol)(Manifest.stringValue)
     val live = st.files.filter(f => ranges.get(f) match {
       case Some((mn, mx)) =>
         val allBelow = utf8Cmp(mx, prefix) < 0
@@ -2372,13 +2167,7 @@ object SnapshotTable {
         !allBelow && !allAbove
       case None => true
     })
-    val residual = col(statsCol).startsWith(prefix)
-    val frame =
-      if (live.isEmpty)
-        read(spark, dir, Some(st.version)).filter(lit(false))
-      else readResolved(spark, dir, Some(st.version), withLineage = false,
-        restrictTo = Some(live.toSet)).filter(residual)
-    (frame, live.size, st.files.size)
+    prunedRead(spark, dir, st, live, col(statsCol).startsWith(prefix))
   }
 
   /** Snapshot read restricted to the given partition VALUES of
@@ -2393,21 +2182,10 @@ object SnapshotTable {
   def readPartitions(spark: SparkSession, dir: String, partCol: String,
       values: Seq[String],
       version: Option[Long] = None): (DataFrame, Int, Int) = {
-    val st = committedState(spark, dir)
-    val v = version.getOrElse(st.version)
-    val files =
-      if (v == st.version) st.files
-      else {
-        val (fs, root) = fsFor(spark, dir)
-        dataLines(manifestLinesAt(fs, root, dir, v))
-      }
+    val st = stateFor(spark, dir, version)
     val dirs = values.map(x => partDirOf(partCol, x)).toSet
-    val live = files.filter(f => dirs.contains(f.split('/').head))
-    val frame =
-      if (live.isEmpty) read(spark, dir, Some(v)).filter(lit(false))
-      else readResolved(spark, dir, Some(v), withLineage = false,
-        restrictTo = Some(live.toSet))
-    (frame, live.size, files.size)
+    prunedRead(spark, dir, st,
+      st.files.filter(f => dirs.contains(f.split('/').head)), lit(true))
   }
 
   /** Conditional (compare-and-swap) write: commits `df` as snapshot
@@ -2422,6 +2200,7 @@ object SnapshotTable {
   def writeIf(spark: SparkSession, dir: String, df: DataFrame,
       partCol: String, expectedPrev: Long,
       meta: Map[String, String] = Map.empty): Option[Long] = {
+    Manifest.requireHeaders(meta) // before staging: a refusal leaves nothing
     val st = latestState(spark, dir).getOrElse(EmptyState)
     if (st.version != expectedPrev) return None
     enforce(st.meta, df, "writeIf")
@@ -2510,8 +2289,8 @@ object SnapshotTable {
     * rows' stable addresses (relative file path, row index within the
     * file) are written as a parquet SIDECAR under `_dv/`, and the new
     * manifest commits the UNCHANGED data-file list plus the sidecar
-    * ('~'-prefixed line). Readers anti-join the scan against the DV set
-    * on the address pair, so the delete is visible atomically with the
+    * entry. Readers anti-join the scan against the DV set on the
+    * address pair, so the delete is visible atomically with the
     * commit while every byte of data stays where it was.
     *
     * This is the contract a 100 TB table needs for small deletes (GDPR
@@ -2709,11 +2488,10 @@ object SnapshotTable {
     * the table. */
   def analyzeStats(spark: SparkSession, dir: String,
       statsCol: String): Long = {
-    require(!statsCol.contains("|"),
-      s"stats column name '$statsCol' contains the stats-line delimiter '|'")
+    Manifest.requireStatsColumn(statsCol)
     commitLoop(spark, dir, "analyze") { st =>
-      val covered = st.stats.map(parseStatRaw)
-        .collect { case (c, f, _, _) if c == statsCol => f }.toSet
+      val covered = st.stats.map(Manifest.statKey)
+        .collect { case (c, f) if c == statsCol => f }.toSet
       val missing = st.files.filterNot(covered.contains)
       if (missing.isEmpty) Done(st.version)
       else Commit(st.files, st.carried, st.dvs,
@@ -2900,8 +2678,7 @@ object SnapshotTable {
   private[graft] def compactClusteredHooked(spark: SparkSession,
       dir: String, partCol: String, statsCol: String, rangeParts: Int,
       scope: Seq[String], afterStage: () => Unit): Long = {
-    require(!statsCol.contains("|"),
-      s"stats column name '$statsCol' contains the stats-line delimiter '|'")
+    Manifest.requireStatsColumn(statsCol)
     optimizeLoop(spark, dir, partCol, scope, "recluster",
       (st, snap) => {
         val parts = resolveParts(spark, rangeParts, snap)
@@ -2983,8 +2760,7 @@ object SnapshotTable {
     val n = cols.size
     require(n >= 2 && n <= 8, s"z-order needs 2..8 columns, got $n")
     require(cols.distinct.size == n, s"z-order columns must be distinct")
-    cols.foreach(c => require(!c.contains("|"),
-      "stats column names cannot contain the stats-line delimiter '|'"))
+    cols.foreach(Manifest.requireStatsColumn)
     val bits = if (bitsPerDim > 0) bitsPerDim else math.min(8, 62 / n)
     require(bits >= 1 && bits * n <= 62,
       s"bitsPerDim $bits × $n columns exceeds the 62-bit z budget")
@@ -3080,16 +2856,14 @@ object SnapshotTable {
       if (toVersion == st.version) Done(st.version)
       else {
         val target =
-          try manifestLinesAt(fs, root, dir, toVersion)
+          try committedAt(fs, root, dir, toVersion)
           catch { case e: IllegalArgumentException =>
             throw new IllegalArgumentException(
               s"$dir: cannot restore to v$toVersion — its manifest was " +
                 "vacuumed away; restore targets must be within the vacuum " +
                 "retention window (see history() for retained versions)", e)
           }
-        guardDvFormat(dir, target)
-        val files = dataLines(target)
-        val dvs = dvLines(target)
+        val (files, dvs) = (target.files, target.dvs)
         // existence audit batched per DIRECTORY (one listing per
         // partition dir + one for _dv), not one GET per file — on an
         // object store a 10⁵-file target costs hundreds of LISTs, not
@@ -3107,7 +2881,7 @@ object SnapshotTable {
             " restore targets must be within the vacuum retention window")
         enforce(st.meta, read(spark, dir, Some(toVersion)),
           s"restore to v$toVersion")
-        Commit(files, st.carried, dvs, normalizedStats(target), st.version + 1)
+        Commit(files, st.carried, dvs, target.stats, st.version + 1)
       }
     }
   }
@@ -3116,12 +2890,8 @@ object SnapshotTable {
     * restores to the highest-version snapshot committed at or before
     * `tsMillis` — [[readAsOf]]'s stamp resolution feeding [[restore]]'s
     * contract (same refusals, same feed semantics). */
-  def restoreAsOf(spark: SparkSession, dir: String, tsMillis: Long): Long = {
-    val eligible = history(spark, dir).filter(_._2 <= tsMillis)
-    require(eligible.nonEmpty,
-      s"$dir has no snapshot committed at or before $tsMillis")
-    restore(spark, dir, eligible.maxBy(_._1)._1)
-  }
+  def restoreAsOf(spark: SparkSession, dir: String, tsMillis: Long): Long =
+    restore(spark, dir, versionAsOf(spark, dir, tsMillis))
 
   /** DV-delete every row whose `keyCol` appears in `keys` (a
     * DataFrame with one `keyCol` column) — [[deleteWhereDV]]'s
@@ -3185,8 +2955,7 @@ object SnapshotTable {
         // wholesale (opt-in — it is a full copy) or refuse with the
         // remedy spelled out
         val (sfs, sroot) = fsFor(spark, srcDir)
-        if (!sfs.exists(new Path(new Path(sroot, ManifestDir),
-            s"v$since.manifest"))) {
+        if (!sfs.exists(manifestPathOf(new Path(sroot, ManifestDir), since))) {
           if (reseed) return seed()
           throw new ReplicaSourceVacuumedException(
             s"$srcDir vacuumed past the replica's marker v$since — the " +
@@ -3390,13 +3159,11 @@ object SnapshotTable {
   private def replayedVersion(spark: SparkSession, st: TableState,
       fs: FileSystem, mdir: Path, queryId: String, batchId: Long): Option[Long] = {
     def tagScan(limit: Int): Option[Long] = {
-      if (!fs.exists(mdir)) return None
-      val tag = s"#batch=$queryId/$batchId"
-      val sorted = fs.listStatus(mdir).toSeq
-        .flatMap(f => manifestVersion(f.getPath).map(_ -> f.getPath))
-        .sortBy(-_._1)
+      val tag = s"$queryId/$batchId"
+      val sorted = versionsIn(fs, mdir)
       (if (limit > 0) sorted.take(limit) else sorted)
-        .find { case (_, p) => readManifest(fs, p).contains(tag) }
+        .find { case (_, f) =>
+          readManifest(fs, f.getPath).meta.get(BatchKey).contains(tag) }
         .map(_._1)
     }
     st.meta.get(LastBatchPrefix + queryId) match {
@@ -3413,12 +3180,14 @@ object SnapshotTable {
     }
   }
 
+  private val BatchKey = "batch"
+
   /** Headers a batch commit at `base + 1` publishes: the per-manifest
     * `#batch=` line (the bounded-lookback anchor for ancient replays)
     * plus the carried replay marker the O(1) check reads. */
   private def batchMeta(queryId: String, batchId: Long,
       base: Long): Map[String, String] =
-    Map("batch" -> s"$queryId/$batchId",
+    Map(BatchKey -> s"$queryId/$batchId",
       LastBatchPrefix + queryId -> s"$batchId:${base + 1}")
 
   def mergeBatch(spark: SparkSession, dir: String, partCol: String,
@@ -3571,22 +3340,19 @@ object SnapshotTable {
     if (!fs.exists(mdir)) return 0
     val retentionMs = spark.conf
       .get("spark.graft.vacuum.retentionMs", (15L * 60 * 1000).toString).toLong
-    val manifests = fs.listStatus(mdir).toSeq
-      .flatMap(f => manifestVersion(f.getPath).map(_ -> f.getPath))
-      .sortBy(-_._1)
-    val (keep, drop) = manifests.splitAt(math.max(1, retain))
+    val (keep, drop) = versionsIn(fs, mdir).splitAt(math.max(1, retain))
     // full reconstructed state per version — a delta manifest's raw
     // lines alone would miss every carried file (r17 delta manifests)
     val keptStates = keep.map { case (v, _) => stateAt(fs, root, dir, v) }
     // staged-but-unpublished WAP branches reference real bytes readers
     // cannot see yet — protected for the branch's whole lifetime, not
     // just the retention window (an audit can legitimately outlive it)
-    val branchLines = fs.listStatus(mdir).toSeq.filter { f =>
+    val branchStaged = fs.listStatus(mdir).toSeq.filter { f =>
       val n = f.getPath.getName
       n.startsWith("branch.") && n.endsWith(".manifest")
-    }.map(f => readManifest(fs, f.getPath))
+    }.flatMap(f => branchFiles(fs, f.getPath))
     val referenced: Set[String] =
-      keptStates.flatMap(_.files).toSet ++ branchLines.flatMap(dataLines)
+      keptStates.flatMap(_.files).toSet ++ branchStaged
     val referencedDv: Set[String] = keptStates.flatMap(_.dvs).toSet
     // committed-then-superseded garbage: safe to reclaim with no grace
     val droppedStates = drop.map { case (v, _) => stateAt(fs, root, dir, v) }
@@ -3659,10 +3425,10 @@ object SnapshotTable {
       // their delta tails down to this checkpoint). Also extends the
       // reclaim rule to checkpoint sidecars: ckpts below the floor are
       // subsumed by the floor's and deleted with the dropped manifests.
-      val wmRaw = readManifest(fs, manifestPathOf(mdir, wm))
-      if (metaOf(wmRaw).contains(BaseKey)) {
-        val st = stateAt(fs, root, dir, wm)
-        writeCkpt(fs, mdir, wm, st.files, st.dvs, st.stats)
+      readManifest(fs, manifestPathOf(mdir, wm)).body match {
+        case _: Manifest.Delta =>
+          writeCkpt(fs, mdir, wm, stateAt(fs, root, dir, wm).lists)
+        case _: Manifest.Full => ()
       }
       // watermark first, then manifest deletion — a stale writer whose
       // publish lands in the hole always sees the watermark and retracts
@@ -3681,7 +3447,7 @@ object SnapshotTable {
               .toLongOption.exists(_ < wm))
           fs.delete(f.getPath, false): Unit
       }
-      drop.foreach { case (_, p) => fs.delete(p, false) }
+      drop.foreach { case (_, f) => fs.delete(f.getPath, false) }
       // checkpoint sidecars below the floor: subsumed by the floor's
       // checkpoint (or the floor manifest itself when it is full)
       fs.listStatus(mdir).foreach { f =>
