@@ -43,6 +43,12 @@ object GraftSession {
     // syscalls under the CRC layer (measured 11 MB/s on the golden
     // concat). 1 MiB buffers make every stream sequential-IO-sized.
     "spark.hadoop.io.file.buffer.size" -> "1048576",
+    // Every `file:` mkdirs/create through Hadoop starts a `chmod` process
+    // when libhadoop is absent; LocalFs sets the same bits in-process
+    // (see its doc). Only the implementation key: the cache bypass that
+    // `Load` adds for sessions built elsewhere would cost a filesystem
+    // instance per call here.
+    "spark.hadoop.fs.file.impl" -> classOf[graft.io.LocalFs].getName,
     "spark.ui.enabled" -> "false")
 
   def builder(app: String): SparkSession.Builder = {

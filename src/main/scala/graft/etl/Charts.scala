@@ -176,46 +176,55 @@ object Charts {
     * and the top-10 cut run on the driver, ordered exactly as Spark's
     * `orderBy` orders them. */
   def writeDashboard(tables: Map[String, DataFrame], dir: String): Unit = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    implicit val ec: ExecutionContext = ExecutionContext.global
     val spark = tables(Inputs.head).sparkSession
-    def rows(name: String, cols: String*): Seq[Row] =
+    // the four collects are independent jobs, and so are the four
+    // renders: each runs side by side with the others
+    def rows(name: String, cols: String*): Future[Seq[Row]] = Future {
       Load.described(spark, "etl.charts") {
         tables(name).select(cols.map(col): _*).collect().toSeq
       }
-    val byMonth = rows("agg_sales_by_date", "month", "total_sales")
-      .filterNot(_.isNullAt(1)) // sum() skips nulls
-      .groupMapReduce(_.getAs[Number](0).intValue())(_.getDouble(1))(_ + _)
-      .toSeq.sortBy(_._1).map { case (m, v) =>
-        require(m >= 1 && m <= 12, s"agg_sales_by_date month out of range: $m")
-        (MonthNames(m - 1), v)
-      }
+    }
+    val monthRows = rows("agg_sales_by_date", "month", "total_sales")
+    val catRows = rows("agg_sales_by_category", "category_name", "total_sales")
+    val stateRows = rows("agg_sales_by_location", "state", "total_sales")
+    val scoreRows = rows("agg_review_metrics", "review_score", "order_count")
+    val p1 = monthRows.map { rs =>
+      val byMonth = rs.filterNot(_.isNullAt(1)) // sum() skips nulls
+        .groupMapReduce(_.getAs[Number](0).intValue())(_.getDouble(1))(_ + _)
+        .toSeq.sortBy(_._1).map { case (m, v) =>
+          require(m >= 1 && m <= 12, s"agg_sales_by_date month out of range: $m")
+          (MonthNames(m - 1), v)
+        }
+      barChartVertical(byMonth, "VENDAS TOTAIS POR MES")
+    }
     // orderBy(desc(total_sales), col(key)), strings by UTF-8 bytes. An
     // untranslated category's null key (H3) is dropped, as pandas' groupby
     // drops NaN keys; a null label cannot be drawn.
-    def top10(name: String, key: String): Seq[(String, Double)] =
-      rows(name, key, "total_sales").filterNot(_.isNullAt(0)).sorted[Row] { (a, b) =>
+    def top10(rs: Seq[Row]): Seq[(String, Double)] =
+      rs.filterNot(_.isNullAt(0)).sorted[Row] { (a, b) =>
         val byValue = numericAsc(b, a, 1)
         if (byValue != 0) byValue
         else java.util.Arrays.compareUnsigned(
           a.getString(0).getBytes(UTF_8), b.getString(0).getBytes(UTF_8))
       }.take(10).map(r => (r.getString(0), r.getDouble(1)))
-    val byCat = top10("agg_sales_by_category", "category_name")
-    val byState = top10("agg_sales_by_location", "state")
-    val byScore = rows("agg_review_metrics", "review_score", "order_count")
-      .sorted[Row]((a, b) => numericAsc(a, b, 0))
-      .map(r => (r.get(0).toString, r.getAs[Number](1).doubleValue()))
+    val p2 = catRows.map(rs => barChartHorizontal(top10(rs), "TOP 10 CATEGORIAS POR VENDAS"))
+    val p3 = stateRows.map(rs => barChartHorizontal(top10(rs), "TOP 10 ESTADOS POR VENDAS"))
+    val p4 = scoreRows.map { rs =>
+      val byScore = rs.sorted[Row]((a, b) => numericAsc(a, b, 0))
+        .map(r => (r.get(0).toString, r.getAs[Number](1).doubleValue()))
+      barChartVertical(byScore, "DISTRIBUICAO DE AVALIACOES")
+    }
 
     val d = new java.io.File(dir); d.mkdirs()
     def put(name: String, bytes: Array[Byte]): Unit =
       java.nio.file.Files.write(new java.io.File(d, name).toPath, bytes)
-    val p1 = barChartVertical(byMonth, "VENDAS TOTAIS POR MES")
-    val p2 = barChartHorizontal(byCat, "TOP 10 CATEGORIAS POR VENDAS")
-    val p3 = barChartHorizontal(byState, "TOP 10 ESTADOS POR VENDAS")
-    val p4 = barChartVertical(byScore, "DISTRIBUICAO DE AVALIACOES")
-    put("sales_by_month.png", p1)
-    put("sales_by_category.png", p2)
-    put("sales_by_state.png", p3)
-    put("review_distribution.png", p4)
-    put("dashboard_preview.png", dashboard(Seq(p1, p2, p3, p4)))
+    val pngs = Await.result(Future.sequence(Seq(p1, p2, p3, p4)), Duration.Inf)
+    Seq("sales_by_month.png", "sales_by_category.png", "sales_by_state.png",
+      "review_distribution.png").zip(pngs).foreach { case (n, b) => put(n, b) }
+    put("dashboard_preview.png", dashboard(pngs))
   }
 }
 

@@ -1,5 +1,6 @@
 package graft.etl
 
+import graft.io.LocalFs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -10,6 +11,14 @@ import org.apache.spark.sql.functions.col
   * pandas groupby orders by key, Spark groupBy doesn't) in a single file,
   * the reference's layout. Parquet is unsorted by design: it has no
   * row-order contract (S5). At 100 TB see [[writeAtScale]].
+  *
+  * Every parquet and CSV-part write, and the CSV concat, run their file
+  * system calls through [[graft.io.LocalFs]] (passed as write options,
+  * so a session built elsewhere gets it too): the stock local filesystem
+  * starts a `chmod` process per directory and file it makes, about 263
+  * per refresh at golden scale. A table whose parquet is one file sorts
+  * its CSV in one task (1 job); larger ones keep the distributed range
+  * sort (3 jobs).
   */
 object Load {
 
@@ -108,13 +117,22 @@ object Load {
           val t0 = System.nanoTime()
           val path = s"$outDir/parquet/$name"
           described(spark, s"etl.load $name parquet") {
-            df.write.mode("overwrite").parquet(path)
+            df.write.mode("overwrite").options(LocalFs.options).parquet(path)
           }
           val t1 = System.nanoTime()
           described(spark, s"etl.load $name csv") {
             val back = spark.read.schema(df.schema).parquet(path)
-              .orderBy(sortKeys(name).map(col): _*)
-            writeOrderedCsv(back, df.columns.toSeq, s"$outDir/csv/$name")
+            val keys = sortKeys(name).map(col)
+            // A table whose parquet is ONE file (from the file listing:
+            // no job, no planning) was written by one task, so one task
+            // sorts its CSV: 1 job, where the range sort's sample,
+            // shuffle and write are 3. coalesce(1) keeps a file that
+            // splits in one partition. On one split both keep tied rows
+            // (fact_sales, H8) in parquet file order (ExportPinSpec).
+            val sorted =
+              if (back.inputFiles.length == 1) back.coalesce(1).sortWithinPartitions(keys: _*)
+              else back.orderBy(keys: _*)
+            writeOrderedCsv(sorted, df.columns.toSeq, s"$outDir/csv/$name")
           }
           // per-table cost itemization (stderr keeps the stdout report
           // line contract clean); start/end are seconds since writeAll
@@ -141,11 +159,11 @@ object Load {
     * does exactly that). */
   private def writeOrderedCsv(sorted: DataFrame, columns: Seq[String], dest: String): Unit = {
     import org.apache.hadoop.fs.Path
-    val conf = sorted.sparkSession.sparkContext.hadoopConfiguration
+    val conf = sorted.sparkSession.sessionState.newHadoopConfWithOptions(LocalFs.options)
     val tmp = new Path(dest + "__parts")
     val fs = tmp.getFileSystem(conf)
     val tw = System.nanoTime()
-    sorted.write.mode("overwrite")
+    sorted.write.mode("overwrite").options(LocalFs.options)
       .option("header", "false")
       // default CSV writer prints ms precision; golden carries ns
       // (we keep µs — the max Spark holds)

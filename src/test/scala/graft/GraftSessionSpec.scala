@@ -16,6 +16,12 @@ class GraftSessionSpec extends SparkSpec {
     }
   }
 
+  test("file: paths resolve to LocalFs, which starts no chmod process") {
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    assert(fs.getClass == classOf[graft.io.LocalFs])
+  }
+
   test("parity mode: x/0 is null, never an exception (SURVEY H5)") {
     assert(spark.sql("SELECT 1 / 0 AS q").head().isNullAt(0))
   }
